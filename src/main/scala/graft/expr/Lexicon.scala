@@ -60,19 +60,13 @@ object Lexicon {
     "sorts" -> "sort", "joins" -> "join", "scans" -> "scan",
     "streams" -> "stream", "windows" -> "window")
 
-  /** Entity extraction as a native expression: tokenize, canonicalize
-    * aliases, keep lexicon hits, dedupe (one mention per entity per row,
-    * matching the reference's set() at danmaku_analysis_cluster.py:100).
-    * No UDF: `transform` + `array_intersect` stay in Tungsten.
+  /** Entity extraction: split on spaces, canonicalize aliases, keep
+    * lexicon hits, dedupe in first-occurrence order (one mention per
+    * entity per row, matching the reference's set() at
+    * danmaku_analysis_cluster.py:100); NULL text gives NULL. One
+    * codegen'd pass over the UTF-8 bytes ([[TokenEntities]]); callers
+    * sort the result.
     */
-  def extractEntities(textCol: Column): Column = {
-    val toks = split(textCol, " ")
-    val canon = transform(toks, t => {
-      val mapped = aliases.foldLeft(t)((acc, kv) =>
-        when(acc === kv._1, kv._2).otherwise(acc))
-      mapped
-    })
-    // array_intersect dedupes and keeps only lexicon members.
-    array_intersect(canon, typedLit(entities))
-  }
+  def extractEntities(textCol: Column): Column =
+    TokenEntities(textCol, entities, aliases.toSeq)
 }

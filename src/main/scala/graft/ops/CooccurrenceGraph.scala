@@ -27,12 +27,23 @@ object CooccurrenceGraph {
     * the reference's sorted(set(...)) (danmaku_analysis_cluster.py:142).
     */
   def entityRows(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.documents(spark, dir))
-      .filter(col("text").isNotNull)
-      .select(
-        col("doc_id"),
-        sort_array(Lexicon.extractEntities(col("text"))).as("entities"))
-      .filter(size(col("entities")) > 0)
+    nonEmptySets(Tables.spread(Tables.documents(spark, dir)), "entities")
+
+  /** (doc_id, `name`) for documents with at least one lexicon entity:
+    * the sorted extraction, evaluated ONCE per document. A plain
+    * `select(...).filter(size(set) > 0)` lets the optimizer push the
+    * size filter below the projection with the alias inlined, so the
+    * extraction ran twice per row (three times with the expression the
+    * kernel replaced, which also drew an inferred `isnotnull`). Here
+    * the set leaves through a one-element `explode`: the filter reads a
+    * generator output, which no rule pushes or inlines below the
+    * `Generate` (TokenEntitiesSpec counts the kernel in each plan).
+    */
+  private[ops] def nonEmptySets(docs: DataFrame, name: String): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        explode(array(sort_array(Lexicon.extractEntities(col("text"))))).as(name))
+      .filter(size(col(name)) > 0)
 
   /** Node table (Id, Size): mention count per entity — one mention per
     * document per entity (set semantics, danmaku_analysis_cluster.py:100).

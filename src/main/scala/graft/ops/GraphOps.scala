@@ -484,26 +484,144 @@ object GraphOps {
     * the protagonist" is the canonical relation-graph read the readme's
     * 人物关系 aspiration implies and none of q33-q35 answer.
     *
-    * Pure DataFrame frontier iteration — no GraphX: each round is ONE
+    * Semantics (both paths below): hub = the largest Σweight over both
+    * endpoint columns (q32's degree convention), ties to the smallest
+    * name in UTF-8 byte order (Spark's `asc`); hops follow the distinct
+    * undirected neighbours for at most `maxHops` rounds, stopping early
+    * on an empty frontier; unreachable vertices are omitted — hop is a
+    * distance, not a status column. An empty edge frame gives an empty
+    * result. Output (entity_id string, hop bigint) ordered by
+    * (hop, entity_id).
+    *
+    * Two paths, chosen by reading the optimizer's size estimate for
+    * `edges` from its plan statistics (no job):
+    *   - under [[bfsInTaskMaxBytes]] (integral weights): hub selection
+    *     and the whole bounded BFS run inside ONE executor task
+    *     (`coalesce(1).mapPartitions`, the [[louvain]] / q338 collapse)
+    *     — no collect, no cache, no per-round checkpoint. The q110
+    *     graph is lexicon-bounded (≤ 10 vertices, 36 edges at sf0.1),
+    *     where each distributed round cost a job and two checkpoint
+    *     writes for a few rows: 20 jobs and 14 block writes per
+    *     execution, against 2 jobs and none in one task;
+    *   - otherwise (and for frames of unknown size, which estimate at
+    *     Long.MaxValue) [[bfsHopsRounds]], the distributed frontier loop.
+    *
+    * `edges` = (src, dst, weight), one row per undirected pair — the
+    * q31/q95 edge-table shape.
+    */
+  def bfsHops(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame =
+    bfsHopsGated(edges, maxHops, bfsInTaskMaxBytes)
+
+  /** Size-estimate cap for [[bfsHops]]'s one-task path. The estimate
+    * over-states the aggregated graph by orders of magnitude (198 188
+    * bytes for q110's 36-row edge frame at sf0.1, since it scales with
+    * the corpus under the aggregation), so 32 MB keeps every bench and
+    * test scale in one task while a genuinely large edge frame — one
+    * that would not fit a task's heap as Scala collections — stays
+    * distributed.
+    */
+  private val bfsInTaskMaxBytes: Long = 32L << 20
+
+  /** [[bfsHops]] with the one-task cap as a parameter — the seam the
+    * spec uses to run both arms on the same input.
+    */
+  private[graft] def bfsHopsGated(edges: DataFrame, maxHops: Int,
+                                  inTaskMaxBytes: Long): DataFrame = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val e = edges.toDF("src", "dst", "weight")
+    val integral = e.schema("weight").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val planned = e.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (integral && planned < BigInt(inTaskMaxBytes)) bfsHopsInTask(e, maxHops)
+    else bfsHopsRounds(e, maxHops)
+  }
+
+  private def bfsHopsInTask(e: DataFrame, maxHops: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val schema = StructType(Seq(
+      StructField("entity_id", StringType,
+        e.schema("src").nullable || e.schema("dst").nullable),
+      StructField("hop", LongType, nullable = false)))
+    val rows = e.select(col("src"), col("dst"), col("weight").cast("long"))
+      .rdd.coalesce(1)
+      .mapPartitions { it =>
+        val edgeList = it.map(r =>
+          (Option(r.getString(0)), Option(r.getString(1)),
+            if (r.isNullAt(2)) None else Some(r.getLong(2))))
+        bfsLocal(edgeList.toSeq, maxHops).iterator
+          .map { case (v, hop) => Row(v.orNull, hop) }
+      }
+    // one partition, already in (hop, entity_id) order: the local sort
+    // restates that order for the planner without a range exchange
+    e.sparkSession.createDataFrame(rows, schema)
+      .sortWithinPartitions("hop", "entity_id")
+  }
+
+  /** The bounded BFS over an in-memory edge list, replaying
+    * [[bfsHopsRounds]] row for row — including its NULL handling, for
+    * a frame that carries NULL names or weights: a NULL weight adds
+    * nothing (a vertex whose weights are all NULL has a NULL degree,
+    * which sorts last), a NULL name is a vertex of its own that the
+    * equi-join never expands and the anti-join never marks visited.
+    * Returns (entity_id, hop) sorted by (hop, entity_id) with names in
+    * UTF-8 byte order, NULL first.
+    */
+  private def bfsLocal(edges: Seq[(Option[String], Option[String], Option[Long])],
+                       maxHops: Int): Seq[(Option[String], Long)] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val byName: Ordering[Option[String]] = Ordering.Option(
+      Ordering.fromLessThan[String]((a, b) =>
+        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0))
+    val degree = scala.collection.mutable.HashMap.empty[Option[String], Option[Long]]
+    val adj = scala.collection.mutable.HashMap.empty[String, Set[Option[String]]]
+    def add(v: Option[String], w: Option[Long]): Unit = {
+      val d = degree.getOrElse(v, None)
+      degree(v) = (d ++ w).reduceOption(Math.addExact(_, _))
+    }
+    edges.foreach { case (s, d, w) =>
+      add(s, w); add(d, w)
+      s.foreach(x => adj(x) = adj.getOrElse(x, Set.empty) + d)
+      d.foreach(x => adj(x) = adj.getOrElse(x, Set.empty) + s)
+    }
+    if (degree.isEmpty) Seq.empty
+    else {
+      // desc(degree) puts NULL last; asc(entity_id) puts NULL first
+      val hubOrder = Ordering.Tuple3(Ordering.Boolean, Ordering.Long.reverse, byName)
+        .on[(Option[String], Option[Long])](kv => (kv._2.isEmpty, kv._2.getOrElse(0L), kv._1))
+      val hub = degree.toSeq.min(hubOrder)._1
+      val out = scala.collection.mutable.ArrayBuffer((hub, 0L))
+      val visited = scala.collection.mutable.HashSet.empty[String] ++ hub
+      var frontier: Seq[Option[String]] = Seq(hub)
+      var hop = 0L
+      while (hop < maxHops && frontier.nonEmpty) {
+        hop += 1
+        val next = frontier.flatten.flatMap(a => adj.getOrElse(a, Set.empty)).distinct
+          .filter(b => b.forall(x => !visited.contains(x)))
+        next.foreach(b => visited ++= b)
+        out ++= next.sorted(byName).map(_ -> hop)
+        frontier = next
+      }
+      out.toSeq
+    }
+  }
+
+  /** [[bfsHops]] as distributed DataFrame rounds: each round is ONE
     * shuffle join (frontier ⨝ edges on the source key) plus an
     * anti-join against the visited set, the textbook scalable BFS
     * shape (frontier and visited are entity-keyed DataFrames, never
     * driver-side collections). Rounds are lineage-cut with an eager
     * localCheckpoint so round t never recomputes rounds 1..t-1, and
     * the loop exits early on an empty frontier (`isEmpty` touches one
-    * partition of an already-materialized checkpoint). Unreachable
-    * vertices are omitted — hop is a distance, not a status column.
+    * partition of an already-materialized checkpoint).
     *
     * Scale: bounded by min(diameter, maxHops) rounds; each round's
     * shuffles are keyed on entity — the same partitioning every round,
-    * so AQE coalesces the tiny aggregated-graph exchanges. Like
-    * q33/q34 the iteration runs on the lexicon-bounded graph; only the
-    * upstream edge aggregation scales with corpus volume.
-    *
-    * `edges` = (src, dst, weight), one row per undirected pair — the
-    * q31/q95 edge-table shape.
+    * so AQE coalesces the tiny aggregated-graph exchanges.
     */
-  def bfsHops(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame = {
+  private def bfsHopsRounds(edges: DataFrame, maxHops: Int): DataFrame = {
     // the input plan embeds the corpus-scale edge aggregation and is
     // consumed TWICE (symmetrization and hub selection) — cache it so
     // the corpus pays once (review round 8: the uncached hub subplan

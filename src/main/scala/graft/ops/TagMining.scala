@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.fpm.FPGrowth
 import graft.Tables
-import graft.expr.Lexicon
 
 /** Frequent-itemset / association-rule mining — the reference's tag
   * pipeline (tag/main.py:187-194: pyspark.ml.fpm.FPGrowth,
@@ -25,11 +24,7 @@ object TagMining {
 
   /** Per-doc transaction: deduped, sorted entity array (non-empty). */
   def transactions(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        sort_array(Lexicon.extractEntities(col("text"))).as("items"))
-      .filter(size(col("items")) > 0)
+    CooccurrenceGraph.nonEmptySets(Tables.documents(spark, dir), "items")
 
   private def fit(spark: SparkSession, dir: String) =
     new FPGrowth()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,18 +52,20 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("date-partitioned layout prunes partitions at the scan") {
-    val out = Files.createTempDirectory("graft_part_").toString + "/orders_by_month"
-    Tables.orders(spark, sf)
-      .withColumn("order_month", date_format(col("o_orderdate"), "yyyy-MM"))
-      .write.mode("overwrite").partitionBy("order_month").parquet(out)
-    val all = spark.read.parquet(out)
-    val firstMonth = all.agg(min("order_month")).collect()(0).getString(0)
-    val one = all.filter(col("order_month") === firstMonth)
-    assert(one.count() > 0 && one.count() < all.count())
-    val scan = one.queryExecution.executedPlan.toString
-    // partition filter reached the file index (not a post-scan filter)
-    assert(scan.contains("PartitionFilters") &&
-      scan.replaceAll("\\s", "").contains("order_month"),
-      s"expected partition pruning in:\n$scan")
+    withTempDir("graft_part_") { dir =>
+      val out = dir.toString + "/orders_by_month"
+      Tables.orders(spark, sf)
+        .withColumn("order_month", date_format(col("o_orderdate"), "yyyy-MM"))
+        .write.mode("overwrite").partitionBy("order_month").parquet(out)
+      val all = spark.read.parquet(out)
+      val firstMonth = all.agg(min("order_month")).collect()(0).getString(0)
+      val one = all.filter(col("order_month") === firstMonth)
+      assert(one.count() > 0 && one.count() < all.count())
+      val scan = one.queryExecution.executedPlan.toString
+      // partition filter reached the file index (not a post-scan filter)
+      assert(scan.contains("PartitionFilters") &&
+        scan.replaceAll("\\s", "").contains("order_month"),
+        s"expected partition pruning in:\n$scan")
+    }
   }
 }

@@ -13,12 +13,6 @@ import graft.sources.{BinaryIngest, CsvIngest}
   */
 class CsvIngestSpec extends AnyFunSuite with SparkTestBase {
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft_ingest_")
-    d.toFile.deleteOnExit()
-    d
-  }
-
   private val header = "dmid,video_time,text,send_date,uid,source"
 
   private def writeEpisode(dir: Path, bvid: String, rows: Seq[String], bom: Boolean = false): Unit = {
@@ -28,32 +22,33 @@ class CsvIngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("glob scan: BOM, quoted multiline text, lineage, malformed rows, duplicate ids") {
-    val dir = tmpDir()
-    writeEpisode(dir, "BV1xx", Seq(
-      """1001,12.5,"hello, with comma",2025-02-15 11:00:15,aa,api""",
-      "1002,13.0,\"line one\nline two\",2025-02-15 11:00:16,bb,api",
-      """1003,not_a_number,bad row,2025-02-15 11:00:17,cc,api""",
-      """1001,12.5,"dup of 1001",2025-02-15 11:00:15,aa,api"""),
-      bom = true)
-    writeEpisode(dir, "BV2yy", Seq(
-      """2001,1.0,plain,2025-02-16 09:00:00,dd,history"""))
+    withTempDir("graft_ingest_") { dir =>
+      writeEpisode(dir, "BV1xx", Seq(
+        """1001,12.5,"hello, with comma",2025-02-15 11:00:15,aa,api""",
+        "1002,13.0,\"line one\nline two\",2025-02-15 11:00:16,bb,api",
+        """1003,not_a_number,bad row,2025-02-15 11:00:17,cc,api""",
+        """1001,12.5,"dup of 1001",2025-02-15 11:00:15,aa,api"""),
+        bom = true)
+      writeEpisode(dir, "BV2yy", Seq(
+        """2001,1.0,plain,2025-02-16 09:00:00,dd,history"""))
 
-    val raw = CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv")
-    val clean = CsvIngest.cleanDanmaku(raw).cache()
+      val raw = CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv")
+      val clean = CsvIngest.cleanDanmaku(raw).cache()
 
-    // malformed video_time dropped; duplicate dmid collapsed
-    assert(clean.count() == 3)
-    // BOM did not corrupt the first column: dmid parsed as long
-    assert(clean.filter(col("dmid") === 1001L).count() == 1)
-    // embedded newline preserved inside one row
-    val multiline = clean.filter(col("dmid") === 1002L).select("text").collect()(0).getString(0)
-    assert(multiline == "line one\nline two")
-    // lineage: bvid extracted from filename
-    val byBvid = clean.groupBy("bvid").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byBvid == Map("BV1xx" -> 2L, "BV2yy" -> 1L))
-    // timestamps parsed
-    assert(clean.filter(col("send_date").isNull).count() == 0)
+      // malformed video_time dropped; duplicate dmid collapsed
+      assert(clean.count() == 3)
+      // BOM did not corrupt the first column: dmid parsed as long
+      assert(clean.filter(col("dmid") === 1001L).count() == 1)
+      // embedded newline preserved inside one row
+      val multiline = clean.filter(col("dmid") === 1002L).select("text").collect()(0).getString(0)
+      assert(multiline == "line one\nline two")
+      // lineage: bvid extracted from filename
+      val byBvid = clean.groupBy("bvid").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(byBvid == Map("BV1xx" -> 2L, "BV2yy" -> 1L))
+      // timestamps parsed
+      assert(clean.filter(col("send_date").isNull).count() == 0)
+    }
   }
 
   test("chaos: corrupt files mid-glob degrade to dropped rows, never a failed scan") {
@@ -62,60 +57,65 @@ class CsvIngestSpec extends AnyFunSuite with SparkTestBase {
     // is PERMISSIVE drop-don't-fail: every row of every healthy file
     // survives, a corrupt file contributes nothing, and the job ends
     // green — one bad object must not kill a 150-file scan.
-    val dir = tmpDir()
-    writeEpisode(dir, "BV1ok", Seq(
-      """1001,1.5,first valid,2025-03-01 10:00:00,aa,api"""))
-    // binary junk mid-directory: not CSV at all
-    Files.write(dir.resolve("danmaku_BV2bad.csv"),
-      Array.tabulate[Byte](512)(i => ((i * 131) ^ (i >> 3)).toByte))
-    // torn quote at record start (died mid-write): the open quote
-    // swallows the rest of the file into a non-numeric dmid
-    Files.write(dir.resolve("danmaku_BV3torn.csv"),
-      (header + "\n\"3001,2.0,died mid-quote\n")
-        .getBytes(StandardCharsets.UTF_8))
-    writeEpisode(dir, "BV4ok", Seq(
-      """4001,4.0,last valid,2025-03-02 12:00:00,bb,api"""))
+    withTempDir("graft_ingest_") { dir =>
+      writeEpisode(dir, "BV1ok", Seq(
+        """1001,1.5,first valid,2025-03-01 10:00:00,aa,api"""))
+      // binary junk mid-directory: not CSV at all
+      Files.write(dir.resolve("danmaku_BV2bad.csv"),
+        Array.tabulate[Byte](512)(i => ((i * 131) ^ (i >> 3)).toByte))
+      // torn quote at record start (died mid-write): the open quote
+      // swallows the rest of the file into a non-numeric dmid
+      Files.write(dir.resolve("danmaku_BV3torn.csv"),
+        (header + "\n\"3001,2.0,died mid-quote\n")
+          .getBytes(StandardCharsets.UTF_8))
+      writeEpisode(dir, "BV4ok", Seq(
+        """4001,4.0,last valid,2025-03-02 12:00:00,bb,api"""))
 
-    val clean = CsvIngest.cleanDanmaku(
-      CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv"))
-    val rows = clean.select("dmid", "bvid").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(rows == Map(1001L -> "BV1ok", 4001L -> "BV4ok"))
+      val clean = CsvIngest.cleanDanmaku(
+        CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv"))
+      val rows = clean.select("dmid", "bvid").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(rows == Map(1001L -> "BV1ok", 4001L -> "BV4ok"))
+    }
   }
 
   test("idempotent append: re-ingesting an overlapping batch is a no-op") {
-    val dir = tmpDir()
-    writeEpisode(dir, "BV1xx", Seq(
-      """1,1.0,a,2025-02-15 11:00:15,u1,api""",
-      """2,2.0,b,2025-02-15 11:00:16,u2,api"""))
-    val first = CsvIngest.cleanDanmaku(
-      CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv"))
-    val again = CsvIngest.appendIncremental(first, first)
-    assert(again.count() == first.count())
+    withTempDir("graft_ingest_") { dir =>
+      writeEpisode(dir, "BV1xx", Seq(
+        """1,1.0,a,2025-02-15 11:00:15,u1,api""",
+        """2,2.0,b,2025-02-15 11:00:16,u2,api"""))
+      val first = CsvIngest.cleanDanmaku(
+        CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv"))
+      val again = CsvIngest.appendIncremental(first, first)
+      assert(again.count() == first.count())
+    }
   }
 
   test("CSV sink round-trip: single file with header") {
-    val dir = tmpDir()
-    writeEpisode(dir, "BV1xx", Seq("""1,1.5,roundtrip,2025-02-15 11:00:15,u1,api"""))
-    val clean = CsvIngest.cleanDanmaku(
-      CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv"))
-    val out = tmpDir().resolve("csv_out").toString
-    CsvIngest.writeCsvSingle(clean.select("dmid", "video_time", "text"), out)
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv"))
-    assert(files.length == 1, "coalesce(1) must produce a single part file")
-    val back = spark.read.option("header", true).csv(out)
-    assert(back.count() == 1)
-    assert(back.columns.toSeq == Seq("dmid", "video_time", "text"))
+    withTempDir("graft_ingest_") { dir =>
+      writeEpisode(dir, "BV1xx", Seq("""1,1.5,roundtrip,2025-02-15 11:00:15,u1,api"""))
+      val clean = CsvIngest.cleanDanmaku(
+        CsvIngest.readDanmaku(spark, dir.toString + "/danmaku_*.csv"))
+      val out = dir.resolve("csv_out").toString
+      CsvIngest.writeCsvSingle(clean.select("dmid", "video_time", "text"), out)
+      val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv"))
+      assert(files.length == 1, "coalesce(1) must produce a single part file")
+      val back = spark.read.option("header", true).csv(out)
+      assert(back.count() == 1)
+      assert(back.columns.toSeq == Seq("dmid", "video_time", "text"))
+    }
   }
 
   test("JSON sink round-trip: nested timeline written executor-side") {
-    val out = tmpDir().resolve("json_out").toString
-    val timeline = ops.EnergyPipeline.timeline(spark, sf)
-    CsvIngest.writeJson(timeline, out)
-    val back = spark.read.json(out)
-    assert(back.count() == timeline.count())
-    // nested array<struct> survived the round trip
-    assert(back.schema("timeline").dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+    withTempDir("graft_ingest_") { dir =>
+      val out = dir.resolve("json_out").toString
+      val timeline = ops.EnergyPipeline.timeline(spark, sf)
+      CsvIngest.writeJson(timeline, out)
+      val back = spark.read.json(out)
+      assert(back.count() == timeline.count())
+      // nested array<struct> survived the round trip
+      assert(back.schema("timeline").dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+    }
   }
 
   private def elem(id: Long, progressMs: Int, content: String, ctime: Long,
@@ -129,18 +129,19 @@ class CsvIngestSpec extends AnyFunSuite with SparkTestBase {
       elem(1L, 10949, "哇库哇库", 1700000000L, "94c89b97"),
       elem(2L, 20000, "comma, quote\" newline\n", 1700000001L, "aabbccdd"),
       elem(1L, 10949, "哇库哇库", 1700000000L, "94c89b97"))
-    val dir = tmpDir()
-    Files.write(dir.resolve("seg_1.bin"), BinaryIngest.encodeSegment(recs.take(2)))
-    Files.write(dir.resolve("seg_2.bin"), BinaryIngest.encodeSegment(recs.drop(2)))
-    val decoded = BinaryIngest.readSegments(spark, dir.toString + "/seg_*.bin")
-    val rows = decoded.collect().sortBy(_.id)
-    assert(rows.length == 2, "dedup on id across segments")
-    assert(rows(0) == recs.head, "full field-for-field round trip")
-    assert(rows(1).midHash == "aabbccdd")
-    // the crawler's CSV projection (spider_worker.py:40-46)
-    val csvRow = BinaryIngest.toCrawlerRows(decoded)
-      .filter(org.apache.spark.sql.functions.col("dmid") === "1").collect().head
-    assert(csvRow.getDouble(1) == 10.949) // progress ms → seconds, 3 dp
+    withTempDir("graft_ingest_") { dir =>
+      Files.write(dir.resolve("seg_1.bin"), BinaryIngest.encodeSegment(recs.take(2)))
+      Files.write(dir.resolve("seg_2.bin"), BinaryIngest.encodeSegment(recs.drop(2)))
+      val decoded = BinaryIngest.readSegments(spark, dir.toString + "/seg_*.bin")
+      val rows = decoded.collect().sortBy(_.id)
+      assert(rows.length == 2, "dedup on id across segments")
+      assert(rows(0) == recs.head, "full field-for-field round trip")
+      assert(rows(1).midHash == "aabbccdd")
+      // the crawler's CSV projection (spider_worker.py:40-46)
+      val csvRow = BinaryIngest.toCrawlerRows(decoded)
+        .filter(org.apache.spark.sql.functions.col("dmid") === "1").collect().head
+      assert(csvRow.getDouble(1) == 10.949) // progress ms → seconds, 3 dp
+    }
   }
 
   test("protobuf decode: hand-built wire bytes per the public spec") {
@@ -179,13 +180,14 @@ class CsvIngestSpec extends AnyFunSuite with SparkTestBase {
 
   test("segment glob survives a garbage file: valid segments decode, junk yields zero rows") {
     val recs = Seq(elem(11L, 500, "ok", 1L, "m"), elem(12L, 900, "ok2", 2L, "m"))
-    val dir = tmpDir()
-    Files.write(dir.resolve("seg_1.bin"), BinaryIngest.encodeSegment(recs))
-    // not protobuf at all: decoder must skip/abort cleanly, not crash the job
-    Files.write(dir.resolve("seg_2.bin"),
-      Array.tabulate[Byte](257)(i => (i * 131 + 7).toByte))
-    val out = BinaryIngest.readSegments(spark, dir.toString + "/seg_*.bin").collect()
-    assert(out.map(_.id).sorted.toSeq == Seq(11L, 12L))
+    withTempDir("graft_ingest_") { dir =>
+      Files.write(dir.resolve("seg_1.bin"), BinaryIngest.encodeSegment(recs))
+      // not protobuf at all: decoder must skip/abort cleanly, not crash the job
+      Files.write(dir.resolve("seg_2.bin"),
+        Array.tabulate[Byte](257)(i => (i * 131 + 7).toByte))
+      val out = BinaryIngest.readSegments(spark, dir.toString + "/seg_*.bin").collect()
+      assert(out.map(_.id).sorted.toSeq == Seq(11L, 12L))
+    }
   }
 
   test("q83 committed fixture: segments glob decodes to the source episode's row set") {

@@ -283,11 +283,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_clusters_").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Dedup.dedupClusters(spark, dir).collect()
-    assert(out.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
-      Seq((1L, "1,2,3", 3L), (4L, "4,5,6", 3L)))
+    withTempDir("graft_clusters_") { tmp =>
+      val dir = tmp.toString
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = Dedup.dedupClusters(spark, dir).collect()
+      assert(out.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
+        Seq((1L, "1,2,3", 3L), (4L, "4,5,6", 3L)))
+    }
   }
 
   test("q330 md5-simhash signatures: bit-exact vs a plain-Scala " +
@@ -571,11 +573,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_rep_").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = TextAnalysis.repetitionSignals(spark, dir)
-      .as[(Long, Long, Long, Long, Double)].collect().toSeq
-    assert(out === Seq((1L, 4L, 2L, 2L, 0.5), (2L, 2L, 2L, 1L, 0.5)))
+    withTempDir("graft_rep_") { tmp =>
+      val dir = tmp.toString
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val out = TextAnalysis.repetitionSignals(spark, dir)
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq
+      assert(out === Seq((1L, 4L, 2L, 2L, 0.5), (2L, 2L, 2L, 1L, 0.5)))
+    }
   }
 
   test("decontamination flags every train doc whose text duplicates an eval doc") {

@@ -11,8 +11,7 @@ import graft.sources.ParquetLayout
 class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
 
   test("a routing-column filter prunes partitions at the scan, not after it") {
-    val base = java.nio.file.Files.createTempDirectory("graft_layout_spec_")
-    try {
+    withTempDir("graft_layout_spec_") { base =>
       val layout = base.resolve("by_type").toString
       ParquetLayout.stageLayout(spark, sf, layout)
       val plan = ParquetLayout.prunedPurchases(spark, layout)
@@ -39,13 +38,12 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
         .select("event_id", "user_id", "tsu", "value")
         .collect().map(_.toSeq).toSet
       assert(pruned == direct)
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("orc interchange: lossless round trip, filter pushed to the ORC scan") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_orcspec_")
-    try {
+    withTempDir("graft_orcspec_") { base =>
       val src = Tables.eventsMicros(spark, sf)
         .select("event_id", "user_id", "tsu", "value", "event_type")
       val path = base.resolve("ev").toString
@@ -58,7 +56,7 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
         .queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters") &&
         plan.contains("EqualTo(event_type,purchase)"), plan.take(800))
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   /** Per-row-group (min, max) bands of `column` read straight from the
@@ -86,8 +84,7 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q132: sort-on-write clustering makes row-group stats selective") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q132spec_")
-    try {
+    withTempDir("graft_q132spec_") { base =>
       val clustered = base.resolve("clustered").toString
       val scattered = base.resolve("scattered").toString
       ParquetLayout.stageClustered(spark, sf, clustered, 8)
@@ -114,12 +111,11 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
         .queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters") &&
         plan.contains("GreaterThanOrEqual(tsu"), plan.take(800))
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q134: compaction collapses the file count, conserves rows, and never shuffles") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q134spec_")
-    try {
+    withTempDir("graft_q134spec_") { base =>
       val frag = base.resolve("frag").toString
       val comp = base.resolve("comp").toString
       val src = Tables.eventsMicros(spark, sf)
@@ -138,39 +134,39 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       val plan = spark.read.parquet(frag).coalesce(1)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), plan.take(600))
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q155: bucketed layout lands one file per bucket; the join never exchanges") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q155spec_")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (ordersTbl, lineitemTbl) = ParquetLayout.bucketedNames(base)
-    try {
-      ParquetLayout.stageBucketed(spark, sf, base)
-      // the pre-write repartition aligns task hash placement with the
-      // bucket-file rule: exactly one file per bucket, no slivers
-      val (_, nOrderFiles) =
-        ParquetLayout.dirStats(spark, base.resolve("b_orders").toString)
-      val (_, nLineFiles) =
-        ParquetLayout.dirStats(spark, base.resolve("b_lineitem").toString)
-      assert(nOrderFiles == 8 && nLineFiles == 8,
-        s"expected 8 bucket files each, got $nOrderFiles / $nLineFiles")
-      val joined = ParquetLayout.bucketedJoined(spark, base)
-      val plan = joined.queryExecution.executedPlan.toString
-      val ji = plan.indexOf("SortMergeJoin")
-      assert(ji >= 0, s"expected a sort-merge join of bucketed tables:\n$plan")
-      assert(!plan.substring(ji).contains("Exchange"),
-        s"bucketed join must not shuffle either input:\n$plan")
-      // parity: the layout is semantically invisible
-      val flat = Tables.lineitem(spark, sf)
-        .join(Tables.orders(spark, sf),
-          col("l_orderkey") === col("o_orderkey")).count()
-      assert(joined.count() == flat)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql(s"DROP TABLE IF EXISTS $ordersTbl")
-      spark.sql(s"DROP TABLE IF EXISTS $lineitemTbl")
-      Tables.deleteRecursively(base)
+    withTempDir("graft_q155spec_") { base =>
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val (ordersTbl, lineitemTbl) = ParquetLayout.bucketedNames(base)
+      try {
+        ParquetLayout.stageBucketed(spark, sf, base)
+        // the pre-write repartition aligns task hash placement with the
+        // bucket-file rule: exactly one file per bucket, no slivers
+        val (_, nOrderFiles) =
+          ParquetLayout.dirStats(spark, base.resolve("b_orders").toString)
+        val (_, nLineFiles) =
+          ParquetLayout.dirStats(spark, base.resolve("b_lineitem").toString)
+        assert(nOrderFiles == 8 && nLineFiles == 8,
+          s"expected 8 bucket files each, got $nOrderFiles / $nLineFiles")
+        val joined = ParquetLayout.bucketedJoined(spark, base)
+        val plan = joined.queryExecution.executedPlan.toString
+        val ji = plan.indexOf("SortMergeJoin")
+        assert(ji >= 0, s"expected a sort-merge join of bucketed tables:\n$plan")
+        assert(!plan.substring(ji).contains("Exchange"),
+          s"bucketed join must not shuffle either input:\n$plan")
+        // parity: the layout is semantically invisible
+        val flat = Tables.lineitem(spark, sf)
+          .join(Tables.orders(spark, sf),
+            col("l_orderkey") === col("o_orderkey")).count()
+        assert(joined.count() == flat)
+      } finally {
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.sql(s"DROP TABLE IF EXISTS $ordersTbl")
+        spark.sql(s"DROP TABLE IF EXISTS $lineitemTbl")
+      }
     }
   }
 
@@ -178,21 +174,21 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
     // the round-9 wart: fixed graft_q155_* catalog names meant a spec
     // and a query (or two sessions on one metastore) clobbered each
     // other; names are now scoped to the unique staging dir
-    val b1 = java.nio.file.Files.createTempDirectory("graft_q155spec_a_")
-    val b2 = java.nio.file.Files.createTempDirectory("graft_q155spec_b_")
-    val (o1, l1) = ParquetLayout.bucketedNames(b1)
-    val (o2, l2) = ParquetLayout.bucketedNames(b2)
-    try {
-      assert(o1 != o2 && l1 != l2)
-      ParquetLayout.stageBucketed(spark, sf, b1)
-      ParquetLayout.stageBucketed(spark, sf, b2) // interleaved: b1 still live
-      val n1 = ParquetLayout.bucketedJoined(spark, b1).count()
-      val n2 = ParquetLayout.bucketedJoined(spark, b2).count()
-      assert(n1 == n2 && n1 > 0)
-    } finally {
-      Seq(o1, l1, o2, l2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      Tables.deleteRecursively(b1)
-      Tables.deleteRecursively(b2)
+    withTempDir("graft_q155spec_a_") { b1 =>
+      withTempDir("graft_q155spec_b_") { b2 =>
+        val (o1, l1) = ParquetLayout.bucketedNames(b1)
+        val (o2, l2) = ParquetLayout.bucketedNames(b2)
+        try {
+          assert(o1 != o2 && l1 != l2)
+          ParquetLayout.stageBucketed(spark, sf, b1)
+          ParquetLayout.stageBucketed(spark, sf, b2) // interleaved: b1 still live
+          val n1 = ParquetLayout.bucketedJoined(spark, b1).count()
+          val n2 = ParquetLayout.bucketedJoined(spark, b2).count()
+          assert(n1 == n2 && n1 > 0)
+        } finally {
+          Seq(o1, l1, o2, l2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        }
+      }
     }
   }
 
@@ -211,8 +207,7 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
     assert((scratch() -- before).isEmpty)
   }
   test("q165: z-order keeps row-group stats selective on BOTH probe dimensions") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q165spec_")
-    try {
+    withTempDir("graft_q165spec_") { base =>
       val zpath = base.resolve("zorder").toString
       val timeOnly = base.resolve("timeonly").toString
       ParquetLayout.stageZOrdered(spark, sf, zpath, 16)
@@ -242,11 +237,10 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
         .filter(col("user_id") >= pul && col("user_id") < puh
           && col("tsu") >= ptl && col("tsu") < pth).count()
       assert(viaZ == flat && viaZ > 0)
-    } finally Tables.deleteRecursively(base)
+    }
   }
   test("q166: the dim filter prunes fact partitions at RUNTIME via a dynamicpruning subquery") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q166spec_")
-    try {
+    withTempDir("graft_q166spec_") { base =>
       val factPath = base.resolve("events_by_type").toString
       val dimPath = base.resolve("type_dim").toString
       ParquetLayout.stageLayout(spark, sf, factPath)
@@ -269,7 +263,7 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       val flat = Tables.eventsMicros(spark, sf)
         .filter(col("event_type").isin(conv: _*)).count()
       assert(joined.count() == flat && flat > 0)
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   /** (file name, size) listing of one partition directory. */
@@ -283,8 +277,7 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q167: dynamic overwrite replaces ONLY the replayed partition; static would truncate") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q167spec_")
-    try {
+    withTempDir("graft_q167spec_") { base =>
       val path = base.resolve("events_by_type").toString
       ParquetLayout.stageLayout(spark, sf, path)
       val others = Seq("view", "click", "signup", "error")
@@ -316,12 +309,11 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
         .select("event_type").distinct().collect().map(_.getString(0)).toSet
       assert(types == Set("purchase"),
         s"static overwrite should have truncated to the replayed slice: $types")
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q170: avro interchange round trip is lossless") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q170spec_")
-    try {
+    withTempDir("graft_q170spec_") { base =>
       val src = Tables.eventsMicros(spark, sf)
         .select("event_id", "user_id", "tsu", "value", "event_type")
       val path = base.resolve("ev").toString
@@ -330,12 +322,11 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
       // schema survives: same Spark types either side of the row format
       assert(back.schema == src.schema)
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q217: jsonl interchange round trip is lossless under an explicit schema") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q217spec_")
-    try {
+    withTempDir("graft_q217spec_") { base =>
       val src = Tables.eventsMicros(spark, sf)
         .select("event_id", "user_id", "tsu", "value", "event_type")
       val path = base.resolve("ev").toString
@@ -344,12 +335,11 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       // longs exact, doubles shortest-round-trip exact, nulls preserved
       assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
       assert(back.schema == src.schema)
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q171: a manifest commit is metadata-only and old snapshots stay readable") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q171spec_")
-    try {
+    withTempDir("graft_q171spec_") { base =>
       val data = base.resolve("data").toString
       ParquetLayout.stageLayout(spark, sf, data)
       val manifests = java.nio.file.Files.createDirectory(
@@ -378,12 +368,11 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       val v1After = ParquetLayout.snapshotRead(spark, data, manifests, 1)
       assert(v1After.count() == v1Before)
       assert(v1After.filter(col("event_type") === "error").count() == errRows)
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q172: manifest stats prune files on the clustered layout, nothing on scattered") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q172spec_")
-    try {
+    withTempDir("graft_q172spec_") { base =>
       val clustered = base.resolve("clustered").toString
       val scattered = base.resolve("scattered").toString
       ParquetLayout.stageClustered(spark, sf, clustered, 8)
@@ -412,7 +401,7 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       val flat = Tables.eventsMicros(spark, sf)
         .filter(col("tsu") >= plo && col("tsu") < phi).count()
       assert(viaManifest == flat && flat > 0)
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q165 z-value property: column kernel matches a reference Morton interleave") {
@@ -435,8 +424,7 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
 
   test("q173: the delete commit is O(deleted keys), data files untouched, " +
     "and the merge-on-read scan drops exactly the deleted rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q173spec_")
-    try {
+    withTempDir("graft_q173spec_") { base =>
       val data = base.resolve("data").toString
       ParquetLayout.stageClustered(spark, sf, data, 4)
       val filesBefore = ParquetLayout.listDataFiles(spark, data)
@@ -463,13 +451,12 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       val plan = read.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
         s"expected broadcast anti-join, got:\n${plan.take(600)}")
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q178: the manifest diff reads ONLY changed files and reports " +
     "exactly the commit's deletes and inserts") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q178spec_")
-    try {
+    withTempDir("graft_q178spec_") { base =>
       val data = base.resolve("data").toString
       ParquetLayout.stageLayout(spark, sf, data)
       val manifests = java.nio.file.Files.createDirectory(
@@ -508,13 +495,12 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       // identical manifests → structurally empty feed, schema intact
       val empty = ParquetLayout.snapshotDiff(spark, data, manifests, 2, 2)
       assert(empty.count() == 0 && empty.columns.contains("change_type"))
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q180: the fine spec directory-prunes the probe day, the coarse " +
     "spec row-filters it, and the straddling day loses nothing") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q180spec_")
-    try {
+    withTempDir("graft_q180spec_") { base =>
       val ev = Tables.eventsMicros(spark, sf)
         .select("event_id", "user_id", "tsu", "value", "event_type")
       val cut = ParquetLayout.evolutionCut(spark, sf)
@@ -543,13 +529,12 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
         .findAllMatchIn(plan).map(_.group(1)).toSeq
       assert(pf.exists(f => f.contains("day") && f.contains(cutDay.toString)),
         s"fine spec not directory-pruned on day: $pf")
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q179: staged batches are invisible until the publish commit, " +
     "rejected batches forever, and vacuum reclaims them") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q179spec_")
-    try {
+    withTempDir("graft_q179spec_") { base =>
       val data = base.resolve("data").toString
       val orders = Tables.orders(spark, sf)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -586,13 +571,12 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       assert(orphans.toSet == bad.toSet)
       assert(ParquetLayout.snapshotRead(spark, data, manifests, 2).count()
         == nF + nO)
-    } finally Tables.deleteRecursively(base)
+    }
   }
 
   test("q176: vacuum deletes exactly the unreachable files; the live " +
     "snapshot is untouched and the expired one really dies") {
-    val base = java.nio.file.Files.createTempDirectory("graft_q176spec_")
-    try {
+    withTempDir("graft_q176spec_") { base =>
       val data = base.resolve("data").toString
       ParquetLayout.stageLayout(spark, sf, data)
       val manifests = java.nio.file.Files.createDirectory(
@@ -618,6 +602,6 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
       intercept[Exception] {
         ParquetLayout.snapshotRead(spark, data, manifests, 1).count()
       }
-    } finally Tables.deleteRecursively(base)
+    }
   }
 }

@@ -60,20 +60,21 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_q285cap_")
-      .toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // unbounded: every clone pair — C(6,2) + 1
-    val unbounded = rows(
-      StreamingQueries.streamingLshDedupImpl(spark, dir, Int.MaxValue))
-    assert(unbounded.size == 16, s"unbounded got ${unbounded.size}")
-    // cap 3: the T bucket saturates after members {3, 6, 1} — exactly
-    // the prefix pairs (3,6), (1,3), (1,6) — while U's cold bucket
-    // still emits its pair
-    val capped = rows(StreamingQueries.streamingLshDedupImpl(spark, dir, 3))
-      .map { case Seq(a: Long, b: Long, _) => (a, b) }.toSet
-    assert(capped === Set((3L, 6L), (1L, 3L), (1L, 6L), (101L, 102L)),
-      s"capped got $capped")
+    withTempDir("graft_q285cap_") { tmp =>
+      val dir = tmp.toString
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      // unbounded: every clone pair — C(6,2) + 1
+      val unbounded = rows(
+        StreamingQueries.streamingLshDedupImpl(spark, dir, Int.MaxValue))
+      assert(unbounded.size == 16, s"unbounded got ${unbounded.size}")
+      // cap 3: the T bucket saturates after members {3, 6, 1} — exactly
+      // the prefix pairs (3,6), (1,3), (1,6) — while U's cold bucket
+      // still emits its pair
+      val capped = rows(StreamingQueries.streamingLshDedupImpl(spark, dir, 3))
+        .map { case Seq(a: Long, b: Long, _) => (a, b) }.toSet
+      assert(capped === Set((3L, 6L), (1L, 3L), (1L, 6L), (101L, 102L)),
+        s"capped got $capped")
+    }
   }
 
   test("q194: streaming sliding windows == batch 4-covering-window " +

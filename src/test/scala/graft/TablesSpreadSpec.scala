@@ -41,8 +41,8 @@ class TablesSpreadSpec extends AnyFunSuite with SparkTestBase {
     // advice: the divisor used to be a caveat no call site applied)
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread_").toString
-    try {
+    withTempDir("graft_spread_") { tmp =>
+      val dir = tmp.toString
       spark.range(100000)
         .select(col("id"),
           md5(col("id").cast("string")).as("a"),
@@ -60,7 +60,7 @@ class TablesSpreadSpec extends AnyFunSuite with SparkTestBase {
       val out = Tables.spread(df)
       assert(out.rdd.getNumPartitions == target,
         "compressed source below the raw gate must still spread")
-    } finally Tables.deleteRecursively(java.nio.file.Paths.get(dir))
+    }
   }
 
   test("boundedCheckpoint materializes under the cap and no-ops above it") {
