@@ -484,75 +484,42 @@ object GraphOps {
     * the protagonist" is the canonical relation-graph read the readme's
     * 人物关系 aspiration implies and none of q33-q35 answer.
     *
-    * Semantics (both paths below): hub = the largest Σweight over both
-    * endpoint columns (q32's degree convention), ties to the smallest
-    * name in UTF-8 byte order (Spark's `asc`); hops follow the distinct
-    * undirected neighbours for at most `maxHops` rounds, stopping early
-    * on an empty frontier; unreachable vertices are omitted — hop is a
+    * Semantics: hub = the largest Σweight over both endpoint columns
+    * (q32's degree convention), ties to the smallest name in UTF-8 byte
+    * order (Spark's `asc`); hops follow the distinct undirected
+    * neighbours for at most `maxHops` rounds, stopping early on an
+    * empty frontier; unreachable vertices are omitted — hop is a
     * distance, not a status column. An empty edge frame gives an empty
     * result. Output (entity_id string, hop bigint) ordered by
     * (hop, entity_id).
     *
-    * Two paths, chosen by reading the optimizer's size estimate for
-    * `edges` from its plan statistics (no job):
-    *   - under [[bfsInTaskMaxBytes]] (integral weights): hub selection
-    *     and the whole bounded BFS run inside ONE executor task
-    *     (`coalesce(1).mapPartitions`, the [[louvain]] / q338 collapse)
-    *     — no collect, no cache, no per-round checkpoint. The q110
-    *     graph is lexicon-bounded (≤ 10 vertices, 36 edges at sf0.1),
-    *     where each distributed round cost a job and two checkpoint
-    *     writes for a few rows: 20 jobs and 14 block writes per
-    *     execution, against 2 jobs and none in one task;
-    *   - otherwise (and for frames of unknown size, which estimate at
-    *     Long.MaxValue) [[bfsHopsRounds]], the distributed frontier loop.
+    * Hub selection and the whole bounded BFS run inside ONE executor
+    * task (`coalesce(1).mapPartitions`, the [[louvain]] / q338
+    * collapse): no collect, no cache, no per-round checkpoint. Like
+    * Louvain the iteration runs on the lexicon-bounded aggregated graph
+    * (≤ 10 vertices, 36 edges at sf0.1); only the upstream edge
+    * aggregation scales with corpus volume, and it stays distributed.
+    * As distributed DataFrame rounds the same loop cost a job and two
+    * checkpoint writes per round for a few rows: 20 jobs and 14 block
+    * writes per execution, against 2 jobs and none in one task.
+    * BfsHopsSpec pins it row for row against a replica of those rounds.
     *
     * `edges` = (src, dst, weight), one row per undirected pair — the
-    * q31/q95 edge-table shape.
+    * q31/q95 edge-table shape, non-NULL names and Long weights.
     */
-  def bfsHops(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame =
-    bfsHopsGated(edges, maxHops, bfsInTaskMaxBytes)
-
-  /** Size-estimate cap for [[bfsHops]]'s one-task path. The estimate
-    * over-states the aggregated graph by orders of magnitude (198 188
-    * bytes for q110's 36-row edge frame at sf0.1, since it scales with
-    * the corpus under the aggregation), so 32 MB keeps every bench and
-    * test scale in one task while a genuinely large edge frame — one
-    * that would not fit a task's heap as Scala collections — stays
-    * distributed.
-    */
-  private val bfsInTaskMaxBytes: Long = 32L << 20
-
-  /** [[bfsHops]] with the one-task cap as a parameter — the seam the
-    * spec uses to run both arms on the same input.
-    */
-  private[graft] def bfsHopsGated(edges: DataFrame, maxHops: Int,
-                                  inTaskMaxBytes: Long): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val e = edges.toDF("src", "dst", "weight")
-    val integral = e.schema("weight").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    val planned = e.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (integral && planned < BigInt(inTaskMaxBytes)) bfsHopsInTask(e, maxHops)
-    else bfsHopsRounds(e, maxHops)
-  }
-
-  private def bfsHopsInTask(e: DataFrame, maxHops: Int): DataFrame = {
+  def bfsHops(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val e = edges.toDF("src", "dst", "weight")
     val schema = StructType(Seq(
       StructField("entity_id", StringType,
         e.schema("src").nullable || e.schema("dst").nullable),
       StructField("hop", LongType, nullable = false)))
-    val rows = e.select(col("src"), col("dst"), col("weight").cast("long"))
+    val rows = e.as[(String, String, Long)](
+        org.apache.spark.sql.Encoders.product[(String, String, Long)])
       .rdd.coalesce(1)
       .mapPartitions { it =>
-        val edgeList = it.map(r =>
-          (Option(r.getString(0)), Option(r.getString(1)),
-            if (r.isNullAt(2)) None else Some(r.getLong(2))))
-        bfsLocal(edgeList.toSeq, maxHops).iterator
-          .map { case (v, hop) => Row(v.orNull, hop) }
+        bfsLocal(it.toSeq, maxHops).iterator.map { case (v, hop) => Row(v, hop) }
       }
     // one partition, already in (hop, entity_id) order: the local sort
     // restates that order for the planner without a range exchange
@@ -560,99 +527,38 @@ object GraphOps {
       .sortWithinPartitions("hop", "entity_id")
   }
 
-  /** The bounded BFS over an in-memory edge list, replaying
-    * [[bfsHopsRounds]] row for row — including its NULL handling, for
-    * a frame that carries NULL names or weights: a NULL weight adds
-    * nothing (a vertex whose weights are all NULL has a NULL degree,
-    * which sorts last), a NULL name is a vertex of its own that the
-    * equi-join never expands and the anti-join never marks visited.
-    * Returns (entity_id, hop) sorted by (hop, entity_id) with names in
-    * UTF-8 byte order, NULL first.
+  /** The bounded BFS of [[bfsHops]] over an in-memory edge list.
+    * Returns (entity_id, hop) sorted by (hop, entity_id), names in
+    * UTF-8 byte order.
     */
-  private def bfsLocal(edges: Seq[(Option[String], Option[String], Option[Long])],
-                       maxHops: Int): Seq[(Option[String], Long)] = {
+  private def bfsLocal(edges: Seq[(String, String, Long)],
+                       maxHops: Int): Seq[(String, Long)] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val byName: Ordering[Option[String]] = Ordering.Option(
-      Ordering.fromLessThan[String]((a, b) =>
-        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0))
-    val degree = scala.collection.mutable.HashMap.empty[Option[String], Option[Long]]
-    val adj = scala.collection.mutable.HashMap.empty[String, Set[Option[String]]]
-    def add(v: Option[String], w: Option[Long]): Unit = {
-      val d = degree.getOrElse(v, None)
-      degree(v) = (d ++ w).reduceOption(Math.addExact(_, _))
-    }
+    val degree = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    val adj = scala.collection.mutable.Map.empty[String, Set[String]]
+      .withDefaultValue(Set.empty)
     edges.foreach { case (s, d, w) =>
-      add(s, w); add(d, w)
-      s.foreach(x => adj(x) = adj.getOrElse(x, Set.empty) + d)
-      d.foreach(x => adj(x) = adj.getOrElse(x, Set.empty) + s)
+      degree(s) = Math.addExact(degree(s), w)
+      degree(d) = Math.addExact(degree(d), w)
+      adj(s) += d
+      adj(d) += s
     }
     if (degree.isEmpty) Seq.empty
     else {
-      // desc(degree) puts NULL last; asc(entity_id) puts NULL first
-      val hubOrder = Ordering.Tuple3(Ordering.Boolean, Ordering.Long.reverse, byName)
-        .on[(Option[String], Option[Long])](kv => (kv._2.isEmpty, kv._2.getOrElse(0L), kv._1))
-      val hub = degree.toSeq.min(hubOrder)._1
-      val out = scala.collection.mutable.ArrayBuffer((hub, 0L))
-      val visited = scala.collection.mutable.HashSet.empty[String] ++ hub
-      var frontier: Seq[Option[String]] = Seq(hub)
+      val hub = degree.minBy { case (v, d) => (-d, UTF8String.fromString(v)) }._1
+      val out = scala.collection.mutable.ArrayBuffer(hub -> 0L)
+      val visited = scala.collection.mutable.HashSet(hub)
+      var frontier = Seq(hub)
       var hop = 0L
       while (hop < maxHops && frontier.nonEmpty) {
         hop += 1
-        val next = frontier.flatten.flatMap(a => adj.getOrElse(a, Set.empty)).distinct
-          .filter(b => b.forall(x => !visited.contains(x)))
-        next.foreach(b => visited ++= b)
-        out ++= next.sorted(byName).map(_ -> hop)
+        val next = frontier.flatMap(adj).distinct.filterNot(visited)
+        visited ++= next
+        out ++= next.sortBy(UTF8String.fromString).map(_ -> hop)
         frontier = next
       }
       out.toSeq
     }
-  }
-
-  /** [[bfsHops]] as distributed DataFrame rounds: each round is ONE
-    * shuffle join (frontier ⨝ edges on the source key) plus an
-    * anti-join against the visited set, the textbook scalable BFS
-    * shape (frontier and visited are entity-keyed DataFrames, never
-    * driver-side collections). Rounds are lineage-cut with an eager
-    * localCheckpoint so round t never recomputes rounds 1..t-1, and
-    * the loop exits early on an empty frontier (`isEmpty` touches one
-    * partition of an already-materialized checkpoint).
-    *
-    * Scale: bounded by min(diameter, maxHops) rounds; each round's
-    * shuffles are keyed on entity — the same partitioning every round,
-    * so AQE coalesces the tiny aggregated-graph exchanges.
-    */
-  private def bfsHopsRounds(edges: DataFrame, maxHops: Int): DataFrame = {
-    // the input plan embeds the corpus-scale edge aggregation and is
-    // consumed TWICE (symmetrization and hub selection) — cache it so
-    // the corpus pays once (review round 8: the uncached hub subplan
-    // re-ran the whole extraction)
-    val e = edges.toDF("src", "dst", "weight").cache()
-    val sym = e.select(col("src").as("a"), col("dst").as("b"))
-      .union(e.select(col("dst"), col("src")))
-      .distinct().cache()
-    // hub = max weighted degree (q32's degree convention), ties to the
-    // lexicographically smallest name — a deterministic, replayable seed
-    val hub = e.select(col("src").as("entity_id"), col("weight"))
-      .union(e.select(col("dst"), col("weight")))
-      .groupBy("entity_id").agg(sum("weight").as("degree"))
-      .orderBy(desc("degree"), asc("entity_id")).limit(1)
-      .select("entity_id")
-    var visited = hub.withColumn("hop", lit(0L)).localCheckpoint(true)
-    var frontier = visited.select("entity_id")
-    var hop = 0L
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      val next = frontier.join(sym, frontier("entity_id") === sym("a"))
-        .select(col("b").as("entity_id")).distinct()
-        .join(visited, Seq("entity_id"), "left_anti")
-        .localCheckpoint(true)
-      visited = visited.union(next.withColumn("hop", lit(hop)))
-        .localCheckpoint(true)
-      frontier = next
-    }
-    sym.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    visited.orderBy("hop", "entity_id")
   }
 
   /** q121 — WIDEST (maximin) paths from the hub: the strength of a
@@ -670,7 +576,7 @@ object GraphOps {
     * lexicon-bounded-iteration scale argument as q33/q110/q118.
     */
   def widestPaths(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame = {
-    // consumed twice (sym + hub) — corpus pays once, like bfsHops
+    // consumed twice (sym + hub) — corpus pays once
     val e = edges.toDF("src", "dst", "weight").cache()
     val sym = e.select(col("src").as("a"), col("dst").as("b"), col("weight"))
       .union(e.select(col("dst"), col("src"), col("weight")))
@@ -785,7 +691,7 @@ object GraphOps {
     * — the structural complement to q89/q35's communities (who clusters
     * with whom) and q110's hops (how far): how DEEP each entity sits.
     *
-    * Classical peeling, DataFrame-iterative like [[bfsHops]]: for
+    * Classical peeling, DataFrame-iterative like [[widestPaths]]: for
     * k = 1, 2, … repeatedly drop vertices whose current degree < k
     * (cascading — each peel round is one degree aggregation + two
     * anti-joins, all keyed on the vertex); vertices peeled while

@@ -1,37 +1,57 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{CooccurrenceGraph, GraphOps}
 
-/** Parity pin for q110's two BFS paths: the one-task arm (hub selection
-  * and every round inside one executor task) must return exactly the
-  * rows, order and schema of the distributed DataFrame rounds, on the
-  * hand fixtures, the sf0.01 co-occurrence graph, an empty edge frame,
-  * a hub tie that UTF-8 and UTF-16 order differently, NULL names and
-  * weights, and random small graphs. Both arms run through the
-  * `bfsHopsGated` seam: a cap of Long.MaxValue admits every sized
-  * frame to the one-task arm, a cap of 0 forces the rounds.
+/** Parity pin for q110's one-task BFS: `GraphOps.bfsHops` (hub
+  * selection and every round inside one executor task) must return
+  * exactly the rows, order and schema of the distributed DataFrame
+  * rounds it replaced, on the hand fixtures, the sf0.01 co-occurrence
+  * graph, an empty edge frame, a hub tie that UTF-8 and UTF-16 order
+  * differently, and random small graphs. The rounds live here as an
+  * independent reference replica.
   */
 class BfsHopsSpec extends AnyFunSuite with SparkTestBase {
 
-  private def inTask(e: DataFrame, maxHops: Int) =
-    GraphOps.bfsHopsGated(e, maxHops, Long.MaxValue)
-  private def rounds(e: DataFrame, maxHops: Int) =
-    GraphOps.bfsHopsGated(e, maxHops, 0L)
-
-  /** The rounds arm ends in a global sort, the one-task arm in a local
-    * sort over its single partition — which arm the gate chose.
+  /** The replaced q110 implementation: per round one frontier ⨝ edges
+    * join plus an anti-join against the visited set, lineage-cut with
+    * an eager localCheckpoint, early exit on an empty frontier; hub =
+    * max Σweight, ties to the smallest name under Spark's `asc`.
     */
-  private def tookOneTask(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectFirst { case s: Sort => !s.global }.get
+  private def rounds(edges: DataFrame, maxHops: Int): DataFrame = {
+    val e = edges.toDF("src", "dst", "weight").cache()
+    val sym = e.select(col("src").as("a"), col("dst").as("b"))
+      .union(e.select(col("dst"), col("src")))
+      .distinct().cache()
+    val hub = e.select(col("src").as("entity_id"), col("weight"))
+      .union(e.select(col("dst"), col("weight")))
+      .groupBy("entity_id").agg(sum("weight").as("degree"))
+      .orderBy(desc("degree"), asc("entity_id")).limit(1)
+      .select("entity_id")
+    var visited = hub.withColumn("hop", lit(0L)).localCheckpoint(true)
+    var frontier = visited.select("entity_id")
+    var hop = 0L
+    while (hop < maxHops && !frontier.isEmpty) {
+      hop += 1
+      val next = frontier.join(sym, frontier("entity_id") === sym("a"))
+        .select(col("b").as("entity_id")).distinct()
+        .join(visited, Seq("entity_id"), "left_anti")
+        .localCheckpoint(true)
+      visited = visited.union(next.withColumn("hop", lit(hop)))
+        .localCheckpoint(true)
+      frontier = next
+    }
+    sym.unpersist(blocking = false)
+    e.unpersist(blocking = false)
+    visited.orderBy("hop", "entity_id")
+  }
 
   private def parity(e: DataFrame, maxHops: Int = GraphOps.bfsMaxHops): Seq[(String, Long)] = {
-    val a = inTask(e, maxHops)
+    val a = GraphOps.bfsHops(e, maxHops)
     val b = rounds(e, maxHops)
-    assert(tookOneTask(a) && !tookOneTask(b))
     assert(a.schema == b.schema)
     val got = a.collect().toSeq
     assert(got == b.collect().toSeq, s"maxHops=$maxHops")
@@ -68,20 +88,6 @@ class BfsHopsSpec extends AnyFunSuite with SparkTestBase {
     assert(parity(edges()).isEmpty)
   }
 
-  test("NULL names and weights follow the rounds' join semantics") {
-    val s = spark
-    import s.implicits._
-    val e = Seq[(String, String, java.lang.Long)](
-      ("a", null, 4L), (null, "b", 9L), ("a", "b", null), ("b", "c", 2L),
-      ("c", null, 1L), ("d", "e", null))
-      .toDF("src", "dst", "weight")
-    parity(e)
-    parity(e, maxHops = 1)
-    // every weight NULL: every degree is NULL, the smallest name wins
-    parity(Seq[(String, String, java.lang.Long)](("q", "p", null), ("p", "r", null))
-      .toDF("src", "dst", "weight"))
-  }
-
   test("random small graphs") {
     val rnd = new scala.util.Random(110L)
     for (_ <- 1 to 4) {
@@ -92,13 +98,9 @@ class BfsHopsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("the sf0.01 co-occurrence graph; the default gate takes one task") {
+  test("the sf0.01 co-occurrence graph") {
     // the sf0.01 tables sit beside the sf0.001 fixtures
     val e = CooccurrenceGraph.edgeCounts(spark, sf.replace("sf0.001", "sf0.01"))
     assert(parity(e).nonEmpty)
-    assert(tookOneTask(GraphOps.bfsHops(e)))
-    // an RDD-backed frame has no size estimate (Long.MaxValue): rounds
-    val unsized = spark.createDataFrame(e.rdd, e.schema)
-    assert(!tookOneTask(GraphOps.bfsHops(unsized)))
   }
 }
