@@ -47,9 +47,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EnergyPipeline.queries("q21_energy_ranked")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. A query that
+    * reads the reference corpus first checks its [[RefData.queryReads]]
+    * paths, so an unmounted corpus fails it with one message naming the
+    * path.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+    modules.map(_._1).reduce(_ ++ _).map { case (name, fn) =>
+      name -> RefData.queryReads.get(name).fold(fn)(paths =>
+        (s: SparkSession, dir: String) => { paths.foreach(RefData.require); fn(s, dir) })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

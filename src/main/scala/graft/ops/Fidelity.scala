@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.RefData.{fanRenGlob, spyGlob}
 import graft.expr.{Lexicon, RefLexicons, TextFunctions}
 import graft.sources.CsvIngest
 
@@ -44,17 +45,6 @@ import graft.sources.CsvIngest
   * absorbed by map-side combine.
   */
 object Fidelity {
-
-  /** The reference's committed corpora, via ASCII symlinks (refdata/ in
-    * this repo) — the real directory name 凡人修仙传 is non-ASCII and a
-    * JVM launched under the container's POSIX locale mangles non-ASCII
-    * filesystem paths (sun.jnu.encoding=ASCII; the -D override is
-    * ignored, it's locale-derived). build.sbt also sets LC_ALL for
-    * forked JVMs, but the symlink keeps the engine independent of who
-    * launches it.
-    */
-  val fanRenGlob = "/root/repo/refdata/fanren/danmaku_*.csv"
-  val spyGlob = "/root/repo/refdata/spy/danmaku_*.csv"
 
   /** Sorted per-row canonical-entity set as a native expression —
     * semantics of the reference's set-of-matching-aliases UDF

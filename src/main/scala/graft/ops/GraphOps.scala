@@ -4,7 +4,7 @@ import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{RefData, Tables}
 
 /** Graph analytics over the co-occurrence graph — PageRank and
   * connected components via GraphX. The reference README claims these
@@ -1388,7 +1388,7 @@ object GraphOps {
       // said sharing was slower (cache 20 s / checkpoint 14 s) did not
       // reproduce on an idle host and are superseded.
       val edges = Fidelity.edgesAgg(Fidelity.entityRows(
-        s, Fidelity.fanRenGlob, graft.expr.RefLexicons.fanRen))
+        s, RefData.fanRenGlob, graft.expr.RefLexicons.fanRen))
         .localCheckpoint(true)
       val memb = labelPropagation(edges)
         .select(explode(col("members")).as("entity_id"),
@@ -1404,7 +1404,7 @@ object GraphOps {
     // GraphOpsSpec.
     "q35_label_propagation" -> ((s, _) =>
       labelPropagation(Fidelity.edgesAgg(
-        Fidelity.entityRows(s, Fidelity.fanRenGlob, graft.expr.RefLexicons.fanRen)))
+        Fidelity.entityRows(s, RefData.fanRenGlob, graft.expr.RefLexicons.fanRen)))
         .withColumn("members", array_join(col("members"), ","))),
     // Louvain over the same relation graph — the readme's other claimed
     // community algorithm. Rows-only like q35 (an optimization fixpoint
@@ -1415,7 +1415,7 @@ object GraphOps {
     // fixture plus exact per-pass monotonicity.
     "q89_louvain_communities" -> ((s, _) =>
       louvain(Fidelity.edgesAgg(
-        Fidelity.entityRows(s, Fidelity.fanRenGlob, graft.expr.RefLexicons.fanRen)))
+        Fidelity.entityRows(s, RefData.fanRenGlob, graft.expr.RefLexicons.fanRen)))
         .withColumn("members", array_join(col("members"), ","))),
     // members serialized for the driver (pandas can't hash numpy arrays,
     // CORRECTNESS_r02); library API keeps the native array<string>.

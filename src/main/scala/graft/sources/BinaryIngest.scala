@@ -190,8 +190,6 @@ object BinaryIngest {
     * the crawler's segment_index fetches, spider_worker.py:29-37).
     */
   val segmentsGlob = "/root/repo/refdata/segments/seg_*.bin"
-  private val fixtureSourceCsv =
-    "/root/repo/refdata/spy/danmaku_BV14G4y157E5.csv"
 
   /** q83: binaryFile scan → wire decode → projection. Hash-checked
     * against DuckDB reading the fixture's SOURCE CSV, so the decoder
@@ -217,6 +215,6 @@ object BinaryIngest {
       s"""SELECT dmid,
             CAST(round(CAST(video_time AS DOUBLE) * 1000) AS INT) AS progress_ms,
             text, uid
-          FROM read_csv('$fixtureSourceCsv', header=true, all_varchar=true)
+          FROM read_csv('${graft.RefData.spyEpisodeCsv}', header=true, all_varchar=true)
           ORDER BY dmid""")
 }

@@ -21,7 +21,7 @@ object FanrenProbe {
       println(f"[probe] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
       spark.catalog.clearCache()
     }
-    val glob = graft.ops.Fidelity.fanRenGlob
+    val glob = graft.RefData.fanRenGlob
     val lex = graft.expr.RefLexicons.fanRen
     for (rep <- 1 to 2) {
       println(s"[probe] === rep $rep")

