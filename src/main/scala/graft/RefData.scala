@@ -23,19 +23,32 @@ import scala.util.Using
   */
 object RefData {
 
-  val fanRenGlob = "/root/repo/refdata/fanren/danmaku_*.csv"
-  val spyGlob = "/root/repo/refdata/spy/danmaku_*.csv"
+  /** The repo's refdata directory, made absolute against the working
+    * directory (the repo root, where sbt and its forked JVMs start).
+    */
+  private val refDir = Paths.get("refdata").toAbsolutePath
+
+  /** Root of the reference project's checkout: $GRAFT_REFERENCE_DIR, else
+    * the directory the refdata/fanren link points into (<root>/data/<show>).
+    * Only the ASCII ancestors of the link target are kept.
+    */
+  private val referenceRoot: String = sys.env.getOrElse("GRAFT_REFERENCE_DIR",
+    scala.util.Try(refDir.resolve(Files.readSymbolicLink(refDir.resolve("fanren")))
+      .getParent.getParent.toString).getOrElse(refDir.toString))
+
+  val fanRenGlob = s"$refDir/fanren/danmaku_*.csv"
+  val spyGlob = s"$refDir/spy/danmaku_*.csv"
 
   /** One SPY episode: the source the committed q83 segments were encoded
     * from (tools.SegmentFixture), and what q83's oracle reads.
     */
-  val spyEpisodeCsv = "/root/repo/refdata/spy/danmaku_BV14G4y157E5.csv"
+  val spyEpisodeCsv = s"$refDir/spy/danmaku_BV14G4y157E5.csv"
 
   /** The reference's relation-graph golden tables (FidelitySpec). */
-  val goldenDir = "/root/reference/relation_graph/dataset_processed"
+  val goldenDir = s"$referenceRoot/relation_graph/dataset_processed"
 
   /** The reference's per-episode energy golden (FidelitySpec). */
-  val energyGolden = "/root/reference/hot/all_episodes_energy.json"
+  val energyGolden = s"$referenceRoot/hot/all_episodes_energy.json"
 
   /** Reference paths each registered query reads when it runs. */
   val queryReads: Map[String, Seq[String]] =
