@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** BASELINE.md's per-query table → name -> recorded warm seconds.
@@ -90,20 +89,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // pin the session zone like Verify does: the events-time contract
-      // (tsu = unix_micros under UTC) and the footer-bounds probe both
-      // assume it, and a bench host with a non-UTC JVM default must not
-      // time different plans than the correctness gate verifies
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus)
     // Warmup: JIT + codegen + parquet footer caches, so the first timed
     // query measures the query, not JVM startup.
     try Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().count()

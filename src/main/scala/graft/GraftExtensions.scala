@@ -10,7 +10,7 @@ import graft.expr.{DotProduct, SimHash64, WinnowFingerprint}
   * Column API (`SELECT simhash64(tokens), dot_product(a, b) ...`).
   *
   * Activate with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * at session build (done by Verify, Bench and the test harness).
+  * at session build (done by `GraftSession`).
   * SURVEY.md §7.4 reserved this hook; the engine needs no custom
   * optimizer rules — Catalyst's stock rewrites cover the surveyed
   * surface — so function injection is its only current payload.

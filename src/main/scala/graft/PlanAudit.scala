@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: condensed physical-plan audit over the registered surface.
   * Flags the anti-patterns the engine must not have at 100 TB:
   * cartesian products, missing scan pruning, missing broadcasts.
@@ -9,10 +7,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(GraftSession.cpus)
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val plan = fn(spark, dir).queryExecution.executedPlan.toString

@@ -36,10 +36,6 @@ object Dedup {
     * source is spread first (no-op on a well-split source;
     * Tables.spread).
     */
-  /** Probe seam for tools.PpjoinProbe (dev-only stage timing). */
-  private[graft] def ppjoinShingleProbe(spark: SparkSession, dir: String): DataFrame =
-    shingleRows(spark, dir).select("doc_id", "sh")
-
   private def shingleRows(spark: SparkSession, dir: String): DataFrame =
     shingleRowsOf(Tables.documents(spark, dir))
 

@@ -41,13 +41,7 @@ object AnnScaleBench {
     val sizes = args.headOption.getOrElse("20000,200000")
       .split(",").map(_.trim.toLong)
     val nQ = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus)
 
     for (n <- sizes) {
       val emb = synthEmbeddings(spark, n).localCheckpoint(true)

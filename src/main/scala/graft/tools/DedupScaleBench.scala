@@ -60,13 +60,7 @@ object DedupScaleBench {
   def main(args: Array[String]): Unit = {
     val sizes = args.headOption.getOrElse("50000,200000")
       .split(",").map(_.trim.toLong)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus)
 
     val nocap = args.contains("nocap")
     for (n <- sizes) {

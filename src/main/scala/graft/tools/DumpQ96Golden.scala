@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates ops/FidelityGolden.scala — the committed golden for
   * q96's oracle gate (r12 verdict task 5). q96's input is the
   * reference's COMMITTED SPY corpus (refdata/, fixed) and its
@@ -24,12 +22,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DumpQ96Golden {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus)
     val rows = graft.SparkEntry.queries("q96_word_freq")(spark, "unused")
       .collect()
     def esc(s: String) = s.replace("'", "''")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump named queries' full results as single-file CSV for
   * before/after equivalence diffing during optimization work.
   * Usage: runMain graft.tools.DumpResults <sfDir> <outDir> q... q...
@@ -11,15 +9,7 @@ object DumpResults {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus)
     for (name <- names) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       df.coalesce(1).write.mode("overwrite")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -22,13 +21,7 @@ object KmeansScaleBench {
   def main(args: Array[String]): Unit = {
     val sizes = args.headOption.getOrElse("20000,200000,1000000")
       .split(",").map(_.trim.toLong)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus)
     for (n <- sizes) {
       val emb = AnnScaleBench.synthEmbeddings(spark, n).localCheckpoint(true)
       emb.count() // materialize outside the timed window

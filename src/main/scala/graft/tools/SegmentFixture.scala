@@ -5,8 +5,6 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{BinaryIngest, CsvIngest}
 
 /** One-off fixture writer: re-encodes one committed episode CSV into
@@ -29,10 +27,7 @@ object SegmentFixture {
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else graft.RefData.spyEpisodeCsv
     val outDir = if (args.length > 1) args(1) else "/root/repo/refdata/segments"
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("segment-fixture")
-      .config("spark.sql.shuffle.partitions", 4)
-      .getOrCreate()
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus)
     try {
       // 27k rows: driver-side collect is fine for a fixture tool (the
       // library-side decode path stays fully distributed). Raw string

@@ -16,16 +16,11 @@ object SparkTestBase {
   }
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // static conf — must be set before session creation; keeps
       // saveAsTable fixtures (BucketingSpec) out of the repo tree
       .config("spark.sql.warehouse.dir", warehouse.toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -23,7 +23,7 @@ load = d.get("load_1m", {})
 # suspects (a whole band re-measured inside one contention wake defeats
 # every in-run defense). They are EXCLUDED from the emitted table —
 # their old BASELINE.md rows survive the re-record — until an isolated
-# re-measure (tools/TimeQueries) clears or replaces them.
+# re-measure (graft.Probe) clears or replaces them.
 provisional = set(d.get("provisional", []))
 print(f"Total (sum of per-query warm min): **{d['value']:.1f} s** "
       f"(reps={d.get('reps')}, failed={d.get('failed')}, sf={d.get('sf')})")

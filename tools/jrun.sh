@@ -6,4 +6,4 @@ OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.la
 JVMOPTS=()
 while [[ $# -gt 0 && "$1" != "--" ]]; do JVMOPTS+=("$1"); shift; done
 shift
-exec env LC_ALL=C.UTF-8 java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx8g -Dfile.encoding=UTF-8 "${JVMOPTS[@]}" -cp "$CP" "$@"
+exec env LC_ALL=C.UTF-8 java $OPENS -Xmx8g -Dfile.encoding=UTF-8 "${JVMOPTS[@]}" -cp "$CP" "$@"
