@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,6 +23,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * Bench times, which re-plans from the analyzed plan), plus the wall
   * around all four. Stages: tasks, wall, executor CPU, input bytes,
   * shuffle read and write bytes, disk spill. Rep 1 pays codegen and JIT.
+  * `procs` counts the operating-system processes the JVM started during
+  * the run (JFR `jdk.ProcessStart`): Hadoop's local filesystem shells out
+  * to `readlink`/`chmod` when libhadoop is absent, a few ms each.
   * Stream micro-batches run under their stream's own job group, so a
   * streaming query lists only the stages its driver thread ran.
   *
@@ -37,7 +43,24 @@ object Probe {
 
   final case class Run(query: String, rep: Int, buildNs: Long,
       optimizeNs: Long, planNs: Long, execNs: Long, wallNs: Long,
-      stages: Seq[Stage])
+      procs: Long, stages: Seq[Stage])
+
+  /** `body`'s result and the number of processes the JVM started while it
+    * ran, from a JFR recording of `jdk.ProcessStart` events alone.
+    */
+  def processStarts[A](body: => A): (A, Long) = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val a = try body finally rec.stop()
+      val f = Files.createTempFile("graft_procs_", ".jfr")
+      try {
+        rec.dump(f)
+        (a, RecordingFile.readAllEvents(f).size.toLong)
+      } finally Files.delete(f)
+    } finally rec.close()
+  }
 
   /** Collects the stages of one job group's jobs. */
   private final class GroupListener(group: String) extends SparkListener {
@@ -103,13 +126,16 @@ object Probe {
         val t0 = System.nanoTime(); val a = body
         (System.nanoTime() - t0, a)
       }
-      val start = System.nanoTime()
-      val (build, df) = timed(SparkEntry.queries(name)(spark, sfDir))
-      val (optimize, _) = timed(df.queryExecution.optimizedPlan)
-      val (plan, _) = timed(df.queryExecution.executedPlan)
-      val (exec, _) = timed(df.write.format("noop").mode("overwrite").save())
-      val wall = System.nanoTime() - start
-      (Run(name, rep, build, optimize, plan, exec, wall, listener.drain(sc)), df)
+      val ((build, optimize, plan, exec, wall, df), procs) = processStarts {
+        val start = System.nanoTime()
+        val (build, df) = timed(SparkEntry.queries(name)(spark, sfDir))
+        val (optimize, _) = timed(df.queryExecution.optimizedPlan)
+        val (plan, _) = timed(df.queryExecution.executedPlan)
+        val (exec, _) = timed(df.write.format("noop").mode("overwrite").save())
+        (build, optimize, plan, exec, System.nanoTime() - start, df)
+      }
+      (Run(name, rep, build, optimize, plan, exec, wall, procs,
+        listener.drain(sc)), df)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -120,7 +146,7 @@ object Probe {
     def s(ns: Long) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(ns / 1e9))
     val phase = s"[phase] rep${r.rep} ${r.query} build=${s(r.buildNs)} " +
       s"optimize=${s(r.optimizeNs)} plan=${s(r.planNs)} exec=${s(r.execNs)} " +
-      s"wall=${s(r.wallNs)} s"
+      s"wall=${s(r.wallNs)} s procs=${r.procs}"
     phase +: r.stages.map(st =>
       s"[stage] rep${r.rep} ${r.query} id=${st.id} tasks=${st.tasks} " +
         s"wall=${s(st.wallMs * 1000000L)} cpu=${s(st.cpuNs)} in=${st.inputBytes} " +

@@ -193,8 +193,8 @@ object LevenshteinBand {
     while (ahi > lo && bhi > lo && a0(ahi - 1) == b0(bhi - 1)) {
       ahi -= 1; bhi -= 1
     }
-    var sa = a0; var salo = lo; var n = ahi - lo
-    var sb = b0; var sblo = lo; var m = bhi - lo
+    var sa = a0; val salo = lo; var n = ahi - lo
+    var sb = b0; val sblo = lo; var m = bhi - lo
     if (n > m) {
       sa = b0; sb = a0
       val t = n; n = m; m = t

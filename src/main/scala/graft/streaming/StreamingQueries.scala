@@ -144,9 +144,9 @@ object StreamingQueries {
     * (r13 verdict task 4 → r14 task 3, generalizing commit eb6eb3a
     * from q79/q212 to the whole family). At sf0.1 every replay's wall
     * is FIXED machinery, not data: each micro-batch commits every
-    * state-store instance — stores × shuffle partitions — as an
-    * HDFS-backed delta file + fsync, so the session's 32 partitions
-    * bill 4× the commit constant that 8 would for ~100k-row inputs.
+    * state-store instance — stores × shuffle partitions — so the
+    * session's 32 partitions bill 4× the per-commit constant that 8
+    * would for ~100k-row inputs.
     * Every harness starts a FRESH checkpoint, so the scoped partition
     * count is this run's alone (a stateful query's shuffle partitioning
     * is fixed at its first checkpoint — a real deployment sizes it to
@@ -154,6 +154,15 @@ object StreamingQueries {
     * Results cannot move: partition count changes WHERE state rows
     * live, never their values, and every harness ends in a total-order
     * sort — the driver's hash gates are the proof this holds.
+    *
+    * The scope also selects [[LocalCheckpointFiles]] as the checkpoint
+    * file manager. The per-commit constant was never the bytes: without
+    * libhadoop, Spark's default manager starts `readlink`/`chmod` shell
+    * processes (2.5–2.9 ms each) for every offset, commit, metadata-log
+    * and state-store file it writes — ~27 ms per log entry, ~188
+    * processes per q128 execution. `LocalCheckpointFiles` writes local
+    * paths through `java.nio` and starts none; other schemes keep
+    * Spark's manager.
     *
     * `noData = Some(false)` additionally skips watermark-only no-data
     * micro-batches — ONLY sound when no emitted row depends on
@@ -172,20 +181,17 @@ object StreamingQueries {
     */
   private def withRunConf[T](spark: SparkSession, parts: Int = 8,
       noData: Option[Boolean] = None)(body: => T): T = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val prevStore = spark.conf.get(providerKey, "")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    noData.foreach(b => spark.conf
-      .set("spark.sql.streaming.noDataMicroBatches.enabled", b.toString))
-    spark.conf.set(providerKey, rocksDbProvider)
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        prevNoData)
-      if (prevStore.isEmpty) spark.conf.unset(providerKey)
-      else spark.conf.set(providerKey, prevStore)
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      providerKey -> rocksDbProvider,
+      LocalCheckpointFiles.Key -> classOf[LocalCheckpointFiles].getName) ++
+      noData.map("spark.sql.streaming.noDataMicroBatches.enabled" -> _.toString)
+    val set = spark.conf.getAll
+    val prev = scoped.map { case (k, _) => k -> set.get(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -198,9 +204,13 @@ object StreamingQueries {
     * through its native WAL/memtable instead. Measured on this harness
     * (tools/StreamStoreAB, sf0.1, local[32], 2 reps, r18): warm deltas
     * q212 5.00→4.26 s, q241 3.93→3.27, q113 3.66→3.14, q99 3.27→2.74,
-    * q194 2.49→2.22 — consistent ~10–18% per query, and the r17 tmpfs
-    * A/B already showed the delta-file I/O itself is page-cache-
-    * absorbed, so the win is the commit/maintenance path, not disk.
+    * q194 2.49→2.22 — consistent ~10–18% per query. The r17 tmpfs A/B
+    * showed the delta-file bytes cost nothing: the per-commit cost is
+    * the per-file shell-outs of Hadoop's local filesystem (see
+    * [[withRunConf]]). Through [[LocalCheckpointFiles]] the HDFS-backed
+    * delta files and RocksDB's checkpoint metadata start none; RocksDB's
+    * SST uploads (`FileSystem.copyFromLocalFile`, a `chmod` per file)
+    * and its local snapshot deletes (Spark's native `rm -rf`) still do.
     * Provider choice is semantics-free (same keys, same values, same
     * watermark math — the provider only stores rows), which the
     * per-round oracle replay re-confirms. At production scale RocksDB
@@ -642,7 +652,6 @@ object StreamingQueries {
     * emitted by eviction there). Both are restored in finally.
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val lookbackUs = graft.ops.TemporalJoins.lookbackSeconds * 1000000L
     val ev = Tables.eventsMicros(spark, dir)
       .select(col("event_id"), col("user_id"), col("tsu"), col("event_type"))
     val bounds = tsuBounds(spark, dir)

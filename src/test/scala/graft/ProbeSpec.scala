@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `graft.Probe`'s core over one sf0.001 query: every phase is timed
-  * inside the measured wall, and each run reports the stages its own jobs
-  * ran, none carried over from the run before.
+  * inside the measured wall, each run reports the stages its own jobs
+  * ran, none carried over from the run before, and the `[phase]` line
+  * counts the processes the JVM started during the run.
   */
 class ProbeSpec extends AnyFunSuite with SparkTestBase {
 
@@ -21,6 +22,7 @@ class ProbeSpec extends AnyFunSuite with SparkTestBase {
       assert(r.stages.nonEmpty, s"no stages in $r")
       assert(r.stages.forall(s => s.tasks > 0 && s.wallMs >= 0), s"bad stage in $r")
       assert(Probe.lines(r).size == 1 + r.stages.size)
+      assert(Probe.lines(r).head.endsWith(s" procs=${r.procs}"), Probe.lines(r).head)
     }
     val Seq(first, second) = runs.map(_.stages.map(_.id))
     assert(first.max < second.min, s"rep 2 lists rep 1's stages: $first / $second")
