@@ -12,6 +12,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev measurement tool: where a registered query's time goes. For each
   * rep and query it prints one `[phase]` line and one `[stage]` line per
@@ -21,8 +22,11 @@ import org.apache.spark.sql.execution.FormattedMode
   * eager work its builder does), optimize (analysis + logical
   * optimization), plan (physical planning) and exec (the noop write
   * Bench times, which re-plans from the analyzed plan), plus the wall
-  * around all four. Stages: tasks, wall, executor CPU, input bytes,
-  * shuffle read and write bytes, disk spill. Rep 1 pays codegen and JIT.
+  * around all four. `sql` counts the SQL executions the run started:
+  * the noop write is one, and a builder's eager work (a checkpoint, an
+  * `isEmpty`) adds its own. Stages: tasks, wall, executor CPU, input
+  * bytes, shuffle read and write bytes, disk spill. Rep 1 pays codegen
+  * and JIT.
   * `procs` counts the operating-system processes the JVM started during
   * the run (JFR `jdk.ProcessStart`): Hadoop's local filesystem shells out
   * to `readlink`/`chmod` when libhadoop is absent, a few ms each.
@@ -43,7 +47,7 @@ object Probe {
 
   final case class Run(query: String, rep: Int, buildNs: Long,
       optimizeNs: Long, planNs: Long, execNs: Long, wallNs: Long,
-      procs: Long, stages: Seq[Stage])
+      sqlExecutions: Int, procs: Long, stages: Seq[Stage])
 
   /** `body`'s result and the number of processes the JVM started while it
     * ran, from a JFR recording of `jdk.ProcessStart` events alone.
@@ -62,9 +66,10 @@ object Probe {
     } finally rec.close()
   }
 
-  /** Collects the stages of one job group's jobs. */
+  /** Collects the stages and SQL executions of one job group. */
   private final class GroupListener(group: String) extends SparkListener {
     private val stageIds = mutable.Set.empty[Int]
+    private var executions = 0
     private val stages = mutable.ArrayBuffer.empty[Stage]
     private val started = mutable.Set.empty[Int]
     private val ended = mutable.Set.empty[Int]
@@ -74,6 +79,12 @@ object Probe {
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       if (inGroup(e.properties)) started += e.jobId
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) =>
+        synchronized(executions += 1)
+      case _ =>
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
@@ -98,15 +109,16 @@ object Probe {
     }
 
     /** Blocks until this listener has seen every job of the group end, then
-      * returns the group's stages. The listener bus delivers a job's stage
-      * events before its end, so no stage is dropped or left for the next
-      * run. Job ids come from the status tracker and from this listener's
-      * own job starts, whichever of the two queues is ahead.
+      * returns the group's SQL execution count and stages. The listener
+      * bus delivers a job's stage events, and the start of the execution
+      * that ran it, before its end, so none is dropped or left for the
+      * next run. Job ids come from the status tracker and from this
+      * listener's own job starts, whichever of the two queues is ahead.
       */
-    def drain(sc: SparkContext): Seq[Stage] = synchronized {
+    def drain(sc: SparkContext): (Int, Seq[Stage]) = synchronized {
       def jobs = sc.statusTracker.getJobIdsForGroup(group).toSet ++ started
       while (!jobs.subsetOf(ended)) wait()
-      stages.sortBy(_.id).toSeq
+      (executions, stages.sortBy(_.id).toSeq)
     }
   }
 
@@ -134,8 +146,9 @@ object Probe {
         val (exec, _) = timed(df.write.format("noop").mode("overwrite").save())
         (build, optimize, plan, exec, System.nanoTime() - start, df)
       }
-      (Run(name, rep, build, optimize, plan, exec, wall, procs,
-        listener.drain(sc)), df)
+      val (executions, stages) = listener.drain(sc)
+      (Run(name, rep, build, optimize, plan, exec, wall, executions, procs,
+        stages), df)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -146,7 +159,7 @@ object Probe {
     def s(ns: Long) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(ns / 1e9))
     val phase = s"[phase] rep${r.rep} ${r.query} build=${s(r.buildNs)} " +
       s"optimize=${s(r.optimizeNs)} plan=${s(r.planNs)} exec=${s(r.execNs)} " +
-      s"wall=${s(r.wallNs)} s procs=${r.procs}"
+      s"wall=${s(r.wallNs)} s sql=${r.sqlExecutions} procs=${r.procs}"
     phase +: r.stages.map(st =>
       s"[stage] rep${r.rep} ${r.query} id=${st.id} tasks=${st.tasks} " +
         s"wall=${s(st.wallMs * 1000000L)} cpu=${s(st.cpuNs)} in=${st.inputBytes} " +

@@ -28,6 +28,11 @@ object RefData {
     */
   private val refDir = Paths.get("refdata").toAbsolutePath
 
+  /** `rel` under the repo's refdata directory: the committed fixtures
+    * (refdata/anime, refdata/segments) and the corpus links alike.
+    */
+  def path(rel: String): String = refDir.resolve(rel).toString
+
   /** Root of the reference project's checkout: $GRAFT_REFERENCE_DIR, else
     * the directory the refdata/fanren link points into (<root>/data/<show>).
     * Only the ASCII ancestors of the link target are kept.

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   * `queries` is the engine's full registered surface; every entry with a
   * DuckDB-expressible result also appears in `oracleSql` (same column
   * names both sides — the driver hash-compares after sorting columns by

@@ -1,8 +1,12 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.{RefData, Tables}
 
@@ -143,55 +147,33 @@ object GraphOps {
     * aspiration (SURVEY §0.1) with a fully verifiable ranking.
     *
     * Scale: like q33 the iteration runs on the lexicon-bounded
-    * aggregated graph — each round is one edge-frame equi-join + a
-    * hash agg keyed on the vertex (the q209/q281 per-round
-    * localCheckpoint discipline); only the upstream edge aggregation
-    * scales with corpus volume.
+    * aggregated graph, here as one [[inOneTask]] kernel in exact BigInt
+    * arithmetic; only the upstream edge aggregation scales with corpus
+    * volume. The edge frame is symmetrized with duplicates kept (the
+    * oracle's UNION ALL).
     */
   def pagerankExact(spark: SparkSession, dir: String): DataFrame =
-    // lexicon-bounded edge table checkpointed once (q75/q337
-    // discipline): the core's sym union re-derives its input twice —
-    // without this the corpus extraction runs twice per invocation
-    pagerankExactCore(
-      CooccurrenceGraph.edgeCounts(spark, dir).localCheckpoint(true))
+    pagerankExactCore(CooccurrenceGraph.edgeCounts(spark, dir))
 
   /** Core over any (src, dst, weight) edge frame — fixture seam. */
-  private[graft] def pagerankExactCore(edges: DataFrame): DataFrame = {
-    val e = edges.toDF("src", "dst", "weight")
-    val sym = e.select(col("src").as("a"), col("dst").as("b"), col("weight"))
-      .unionAll(e.select(col("dst"), col("src"), col("weight")))
-    val outW = sym.groupBy("a").agg(sum("weight").as("ow"))
-    val symw = sym.join(outW, "a").localCheckpoint(true)
-    val verts = symw.select(col("a").as("entity_id")).distinct()
-      .localCheckpoint(true)
-    var rank = verts.select(col("entity_id"), lit(prScale).as("r"))
-      .localCheckpoint(true)
-    for (_ <- 1 to pageRankIters) {
-      // every sum rides decimal(38,0), mirroring the oracle's HUGEINT
-      // discipline (r16 ADVICE): Spark's `div` quotient is BIGINT, so a
-      // Long SUM of shares would silently wrap once a hub's inflow
-      // passes 2^63 (~9.2M vertices at 10^12 mass units) — cast each
-      // quotient back to decimal before aggregating, and keep r decimal
-      // until the final bigint projection
-      val inflow = symw
-        .join(rank, symw("a") === rank("entity_id"))
-        .select(col("b"),
-          expr("cast(cast(r as decimal(38,0)) * weight div ow as decimal(38,0))")
-            .as("share"))
-        .groupBy("b").agg(sum("share").as("inflow"))
-      rank = verts
-        .join(inflow, verts("entity_id") === inflow("b"), "left_outer")
-        .select(col("entity_id"),
-          expr(s"""cast($prReset as decimal(38,0))
-                   + cast(cast(85 as decimal(38,0))
-                          * coalesce(inflow, cast(0 as decimal(38,0)))
-                          div 100 as decimal(38,0))""")
-            .as("r"))
-        .localCheckpoint(true)
-    }
-    rank.select(col("entity_id"), col("r").cast("bigint").as("rank_mm"))
-      .orderBy(desc("rank_mm"), asc("entity_id"))
-  }
+  private[graft] def pagerankExactCore(edges: DataFrame): DataFrame =
+    inOneTask(edges, vertexSchema(edges, "rank_mm", LongType, nullable = true)) { es =>
+      val sym = symmetric(es)
+      val outW = sym.groupMapReduce(_._1)(_._3)(Math.addExact)
+      var rank = outW.map { case (v, _) => v -> BigInt(prScale) }
+      for (_ <- 1 to pageRankIters) {
+        // products and sums in BigInt, the oracle's HUGEINT: the
+        // truncating division is floor on the non-negative domain
+        val inflow = sym.groupMapReduce(_._2) { case (a, _, w) => rank(a) * w / outW(a) }(_ + _)
+        rank = rank.map { case (v, _) =>
+          v -> (BigInt(prReset) + BigInt(85) * inflow.getOrElse(v, BigInt(0)) / 100) }
+      }
+      rank.iterator.map { case (v, r) =>
+        // the ANSI cast to bigint: an out-of-range rank throws
+        if (!r.isValidLong) throw new ArithmeticException(s"rank $r of $v overflows bigint")
+        Row(v, r.toLong)
+      }
+    }.sortWithinPartitions(desc("rank_mm"), asc("entity_id"))
 
   /** q329 — EXACT LABEL PROPAGATION (the natural second conversion the
     * q328 scaladoc's pattern predicts): q35's deterministic weighted
@@ -205,37 +187,25 @@ object GraphOps {
     * output here is per-vertex (entity_id, community = adopted label)
     * — the assignment grain, hash-gated.
     *
-    * Scale: q328's argument — lexicon-bounded iteration, one
-    * edge-join + two hash aggs per round, per-round lineage cuts.
+    * Scale: q328's argument — one [[inOneTask]] kernel over the
+    * lexicon-bounded aggregated graph.
     */
   def lpaExact(spark: SparkSession, dir: String): DataFrame =
-    // same double-extraction rationale as pagerankExact
-    lpaExactCore(
-      CooccurrenceGraph.edgeCounts(spark, dir).localCheckpoint(true))
+    lpaExactCore(CooccurrenceGraph.edgeCounts(spark, dir))
 
   /** Core over any (src, dst, weight) edge frame — fixture seam. */
-  private[graft] def lpaExactCore(edges: DataFrame): DataFrame = {
-    val e = edges.toDF("src", "dst", "weight")
-    val sym = e.select(col("src").as("a"), col("dst").as("b"), col("weight"))
-      .unionAll(e.select(col("dst"), col("src"), col("weight")))
-      .localCheckpoint(true)
-    val verts = sym.select(col("a").as("entity_id")).distinct()
-      .localCheckpoint(true)
-    var lbl = verts.select(col("entity_id"), col("entity_id").as("lbl"))
-      .localCheckpoint(true)
-    for (_ <- 1 to lpaIters) {
-      lbl = sym
-        .join(lbl, sym("a") === lbl("entity_id"))
-        .groupBy(col("b"), col("lbl"))
-        .agg(sum("weight").as("ws"))
-        .groupBy(col("b").as("entity_id"))
-        .agg(min(struct((-col("ws")).as("nws"), col("lbl").as("l"))).as("m"))
-        .select(col("entity_id"), col("m.l").as("lbl"))
-        .localCheckpoint(true)
-    }
-    lbl.select(col("entity_id"), col("lbl").as("community"))
-      .orderBy("entity_id")
-  }
+  private[graft] def lpaExactCore(edges: DataFrame): DataFrame =
+    inOneTask(edges, vertexSchema(edges, "community", StringType, nullable = true)) { es =>
+      val sym = symmetric(es)
+      var lbl = sym.map(t => t._1 -> t._1).toMap
+      for (_ <- 1 to lpaIters) {
+        lbl = sym.groupMapReduce { case (a, b, _) => (b, lbl(a)) }(_._3)(Math.addExact)
+          .groupBy(_._1._1).map { case (v, sums) =>
+            // (Σ weight desc, label asc) — Spark's string order is UTF-8 bytes
+            v -> sums.minBy { case ((_, l), w) => (-w, UTF8String.fromString(l)) }._1._2 }
+      }
+      lbl.iterator.map { case (v, l) => Row(v, l) }
+    }.sortWithinPartitions("entity_id")
 
   /** q337 — MODULARITY OF THE EXACT-LPA PARTITION, fully oracle-gated
     * (r16 verdict task 2: the cheapest remaining no-oracle conversion):
@@ -476,7 +446,99 @@ object GraphOps {
     materializeAndRelease(out, e, g, cc)
   }
 
+  /** Runs `kernel` over the whole of `edges` — (src, dst, weight), non-NULL
+    * names and Long weights — in ONE executor task and returns its rows
+    * under `schema`. Stock Dataset operators only
+    * (`coalesce(1).mapPartitions`), so the kernel is one node of the
+    * caller's own plan and SQL execution: no collect, no cache, no
+    * per-round job or checkpoint, and the output is one partition.
+    *
+    * Sound only while the edge frame is lexicon-bounded, as the
+    * aggregated co-occurrence and relation graphs are (≤ 10 vertices and
+    * 36 edges at sf0.1): only the upstream edge aggregation scales with
+    * the data, and it stays distributed. Measure the crossover with
+    * `GraphScaleBench synth:E1,E2,…` before calling it on another graph;
+    * one too big for one task is the regime for the distributed loops
+    * (q118, q215, q281).
+    */
+  private[graft] def inOneTask(edges: DataFrame, schema: StructType)(
+      kernel: Seq[(String, String, Long)] => Iterator[Row]): DataFrame =
+    edges.toDF("src", "dst", "weight")
+      .as[(String, String, Long)](Encoders.product[(String, String, Long)])
+      .coalesce(1)
+      .mapPartitions(it => kernel(it.toVector))(Encoders.row(schema))
+
+  /** (entity_id, `value`): a per-vertex kernel result over `edges`. */
+  private def vertexSchema(edges: DataFrame, value: String, tpe: DataType,
+                           nullable: Boolean): StructType = {
+    val e = edges.toDF("src", "dst", "weight")
+    StructType(Seq(
+      StructField("entity_id", StringType, e.schema("src").nullable || e.schema("dst").nullable),
+      StructField(value, tpe, nullable)))
+  }
+
+  /** Both directions of every edge, duplicates kept (UNION ALL). */
+  private def symmetric(es: Seq[(String, String, Long)]): Seq[(String, String, Long)] =
+    es.flatMap { case (s, d, w) => Seq((s, d, w), (d, s, w)) }
+
   val bfsMaxHops = 8
+
+  /** The hub and the undirected adjacency of an edge list, or None when
+    * it is empty. The hub is the largest Σweight over both endpoint
+    * columns (q32's degree convention), ties to the smallest name in
+    * UTF-8 byte order (Spark's `asc`); parallel edges keep their largest
+    * weight, and a self-loop is its vertex's own neighbour.
+    */
+  private def hubAndAdjacency(es: Seq[(String, String, Long)])
+      : Option[(String, Map[String, Map[String, Long]])] =
+    if (es.isEmpty) None
+    else {
+      val sym = symmetric(es)
+      val degree = sym.groupMapReduce(_._1)(_._3)(Math.addExact)
+      val hub = degree.minBy { case (v, d) => (-d, UTF8String.fromString(v)) }._1
+      val adj = sym.groupMap(_._1)(t => (t._2, t._3)).map { case (v, ns) =>
+        v -> ns.groupMapReduce(_._1)(_._2)(math.max) }
+      Some((hub, adj))
+    }
+
+  /** The hop-bounded relaxation q110, q121 and q147 share — one hub and
+    * frontier loop under hop count, maximin and min-plus. Round 1
+    * relaxes the hub's own edges (a self-loop included); each later
+    * round relaxes the vertices the round before improved, never back
+    * into the hub. A vertex takes a value only when it is strictly
+    * `better` than the one it holds. Stops after `rounds` rounds or on an
+    * empty frontier; returns each reached vertex's value, starting from
+    * `init`. `step(s, w)` extends a value `s` over an edge of weight `w`.
+    */
+  private def relax(adj: Map[String, Map[String, Long]], hub: String, rounds: Int,
+                    start: Long, init: Map[String, Long])(
+      step: (Long, Long) => Long, better: (Long, Long) => Boolean): Map[String, Long] = {
+    val best = mutable.Map(init.toSeq: _*)
+    var frontier = Map(hub -> start)
+    var round = 0
+    while (round < rounds && frontier.nonEmpty) {
+      round += 1
+      val cand = mutable.Map.empty[String, Long]
+      for ((u, s) <- frontier; (v, w) <- adj(u) if round == 1 || v != hub) {
+        val x = step(s, w)
+        if (cand.get(v).forall(better(x, _))) cand(v) = x
+      }
+      frontier = cand.filter { case (v, x) => best.get(v).forall(better(x, _)) }.toMap
+      best ++= frontier
+    }
+    best.toMap
+  }
+
+  /** One [[inOneTask]] walk from the hub: (entity_id, `value`) rows of
+    * `walk(hub, adjacency)`, none for an empty edge frame.
+    */
+  private def hubWalk(edges: DataFrame, value: String, nullable: Boolean)(
+      walk: (String, Map[String, Map[String, Long]]) => Map[String, Long]): DataFrame =
+    inOneTask(edges, vertexSchema(edges, value, LongType, nullable)) { es =>
+      hubAndAdjacency(es).iterator
+        .flatMap { case (hub, adj) => walk(hub, adj) }
+        .map { case (v, x) => Row(v, x) }
+    }
 
   /** q110 — BFS hop distance from the graph's hub (the max-weighted-
     * degree entity, the reference data's 韩立 analogue — BASELINE.md
@@ -484,22 +546,17 @@ object GraphOps {
     * the protagonist" is the canonical relation-graph read the readme's
     * 人物关系 aspiration implies and none of q33-q35 answer.
     *
-    * Semantics: hub = the largest Σweight over both endpoint columns
-    * (q32's degree convention), ties to the smallest name in UTF-8 byte
-    * order (Spark's `asc`); hops follow the distinct undirected
-    * neighbours for at most `maxHops` rounds, stopping early on an
-    * empty frontier; unreachable vertices are omitted — hop is a
-    * distance, not a status column. An empty edge frame gives an empty
-    * result. Output (entity_id string, hop bigint) ordered by
-    * (hop, entity_id).
+    * Semantics: the hub is [[hubAndAdjacency]]'s; hops follow the
+    * distinct undirected neighbours for at most `maxHops` rounds,
+    * stopping early on an empty frontier; unreachable vertices are
+    * omitted — hop is a distance, not a status column. An empty edge
+    * frame gives an empty result. Output (entity_id string, hop bigint)
+    * ordered by (hop, entity_id).
     *
-    * Hub selection and the whole bounded BFS run inside ONE executor
-    * task (`coalesce(1).mapPartitions`, the [[louvain]] / q338
-    * collapse): no collect, no cache, no per-round checkpoint. Like
-    * Louvain the iteration runs on the lexicon-bounded aggregated graph
-    * (≤ 10 vertices, 36 edges at sf0.1); only the upstream edge
-    * aggregation scales with corpus volume, and it stays distributed.
-    * As distributed DataFrame rounds the same loop cost a job and two
+    * Hub selection and the whole bounded BFS run as one [[inOneTask]]
+    * kernel, [[relax]] under hop count: a vertex improves only on first
+    * discovery, so each round's improved set is the BFS frontier. As
+    * distributed DataFrame rounds the same loop cost a job and two
     * checkpoint writes per round for a few rows: 20 jobs and 14 block
     * writes per execution, against 2 jobs and none in one task.
     * BfsHopsSpec pins it row for row against a replica of those rounds.
@@ -507,59 +564,10 @@ object GraphOps {
     * `edges` = (src, dst, weight), one row per undirected pair — the
     * q31/q95 edge-table shape, non-NULL names and Long weights.
     */
-  def bfsHops(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val e = edges.toDF("src", "dst", "weight")
-    val schema = StructType(Seq(
-      StructField("entity_id", StringType,
-        e.schema("src").nullable || e.schema("dst").nullable),
-      StructField("hop", LongType, nullable = false)))
-    val rows = e.as[(String, String, Long)](
-        org.apache.spark.sql.Encoders.product[(String, String, Long)])
-      .rdd.coalesce(1)
-      .mapPartitions { it =>
-        bfsLocal(it.toSeq, maxHops).iterator.map { case (v, hop) => Row(v, hop) }
-      }
-    // one partition, already in (hop, entity_id) order: the local sort
-    // restates that order for the planner without a range exchange
-    e.sparkSession.createDataFrame(rows, schema)
-      .sortWithinPartitions("hop", "entity_id")
-  }
-
-  /** The bounded BFS of [[bfsHops]] over an in-memory edge list.
-    * Returns (entity_id, hop) sorted by (hop, entity_id), names in
-    * UTF-8 byte order.
-    */
-  private def bfsLocal(edges: Seq[(String, String, Long)],
-                       maxHops: Int): Seq[(String, Long)] = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val degree = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    val adj = scala.collection.mutable.Map.empty[String, Set[String]]
-      .withDefaultValue(Set.empty)
-    edges.foreach { case (s, d, w) =>
-      degree(s) = Math.addExact(degree(s), w)
-      degree(d) = Math.addExact(degree(d), w)
-      adj(s) += d
-      adj(d) += s
-    }
-    if (degree.isEmpty) Seq.empty
-    else {
-      val hub = degree.minBy { case (v, d) => (-d, UTF8String.fromString(v)) }._1
-      val out = scala.collection.mutable.ArrayBuffer(hub -> 0L)
-      val visited = scala.collection.mutable.HashSet(hub)
-      var frontier = Seq(hub)
-      var hop = 0L
-      while (hop < maxHops && frontier.nonEmpty) {
-        hop += 1
-        val next = frontier.flatMap(adj).distinct.filterNot(visited)
-        visited ++= next
-        out ++= next.sortBy(UTF8String.fromString).map(_ -> hop)
-        frontier = next
-      }
-      out.toSeq
-    }
-  }
+  def bfsHops(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame =
+    hubWalk(edges, "hop", nullable = false) { (hub, adj) =>
+      relax(adj, hub, maxHops, 0L, Map(hub -> 0L))((s, _) => s + 1, _ < _)
+    }.sortWithinPartitions("hop", "entity_id")
 
   /** q121 — WIDEST (maximin) paths from the hub: the strength of a
     * relationship chain is its weakest link, so each entity's score is
@@ -570,117 +578,33 @@ object GraphOps {
     * extending u's best: least(s, w) is monotone in s), so bounded
     * Bellman-Ford-style relaxation is exact: after round k, `best`
     * holds the optimum over ≤ k hops — precisely what the oracle's
-    * hop-bounded recursive walk enumerates. All integer arithmetic
-    * (weights are counts), frontier/best are entity-keyed DataFrames,
-    * rounds lineage-cut, early-exit when no strength improves. Same
-    * lexicon-bounded-iteration scale argument as q33/q110/q118.
+    * hop-bounded recursive walk enumerates. [[relax]] under maximin,
+    * in one [[inOneTask]] kernel; all integer arithmetic (weights are
+    * counts). Round 1 always runs, so `maxHops` 0 reads as 1.
     */
-  def widestPaths(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame = {
-    // consumed twice (sym + hub) — corpus pays once
-    val e = edges.toDF("src", "dst", "weight").cache()
-    val sym = e.select(col("src").as("a"), col("dst").as("b"), col("weight"))
-      .union(e.select(col("dst"), col("src"), col("weight")))
-      .groupBy("a", "b").agg(max("weight").as("w")) // parallel edges: strongest
-      .cache()
-    // materialized ONCE: the hub subplan embeds the corpus-scale edge
-    // aggregation, and it re-enters every round's anti-join — without
-    // the checkpoint each round would re-run the whole extraction
-    val hub = e.select(col("src").as("entity_id"), col("weight"))
-      .union(e.select(col("dst"), col("weight")))
-      .groupBy("entity_id").agg(sum("weight").as("degree"))
-      .orderBy(desc("degree"), asc("entity_id")).limit(1)
-      .select(col("entity_id").as("hub"))
-      .localCheckpoint(true)
-    // round 1: the hub's direct edges ARE the 1-hop widest paths
-    var best = hub.join(sym, col("hub") === col("a"))
-      .select(col("b").as("entity_id"), col("w").as("strength"))
-      .localCheckpoint(true)
-    var frontier = best
-    var hop = 1
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      val cand = frontier.join(sym, frontier("entity_id") === sym("a"))
-        .join(hub, col("b") === col("hub"), "left_anti") // never back into the hub
-        .select(col("b").as("entity_id"),
-          least(col("strength"), col("w")).as("s"))
-        .groupBy("entity_id").agg(max("s").as("s"))
-      val improved = cand.join(best.withColumnRenamed("entity_id", "be")
-          .withColumnRenamed("strength", "bs"),
-          col("entity_id") === col("be"), "left_outer")
-        .filter(col("bs").isNull || col("s") > col("bs"))
-        .select(col("entity_id"), col("s").as("strength"))
-        .localCheckpoint(true)
-      best = best.join(improved.select(col("entity_id").as("ie")),
-          col("entity_id") === col("ie"), "left_anti")
-        .select("entity_id", "strength")
-        .union(improved)
-        .localCheckpoint(true)
-      frontier = improved
-    }
-    sym.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    best.orderBy(desc("strength"), asc("entity_id"))
-  }
+  def widestPaths(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame =
+    hubWalk(edges, "strength", nullable = true) { (hub, adj) =>
+      relax(adj, hub, maxHops.max(1), Long.MaxValue, Map.empty)(math.min, _ > _)
+    }.sortWithinPartitions(desc("strength"), asc("entity_id"))
 
   /** q147 — SHORTEST STRONG-TIE PATHS from the hub: min-plus distance
     * where each edge costs (maxW + 1 − weight), so strong ties are
     * cheap and the optimum is the "path of least resistance" through
     * the relationship graph — the third member of the path algebra the
     * engine now covers in full (q110 hop-count = unweighted, q121
-    * maximin = bottleneck width, this = additive cost), all three on
-    * the same hub/edge derivation and the same hop-bounded frontier
-    * loop. Integer costs throughout (weights are counts, the inversion
-    * is one subtraction), so the oracle's recursive-CTE twin replays
-    * it exactly.
-    *
-    * Same scale shape as q121: relaxation rounds run on the
-    * lexicon-bounded aggregated graph, frontier/best entity-keyed,
-    * rounds lineage-cut, early-exit when no cost improves.
+    * maximin = bottleneck width, this = additive cost), all three the
+    * same [[relax]] loop over the same hub and adjacency. Integer costs
+    * throughout (weights are counts, the inversion is one subtraction),
+    * overflow-checked like ANSI bigint arithmetic, so the oracle's
+    * recursive-CTE twin replays it exactly. Round 1 always runs, as in
+    * q121.
     */
-  def shortestTiePaths(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame = {
-    val e = edges.toDF("src", "dst", "weight").cache()
-    val sym0 = e.select(col("src").as("a"), col("dst").as("b"), col("weight"))
-      .union(e.select(col("dst"), col("src"), col("weight")))
-      .groupBy("a", "b").agg(max("weight").as("w")) // parallel edges: strongest
-    val maxW = sym0.agg(max("w").as("mw"))
-    // per-edge additive cost, fixed for the whole walk
-    val sym = sym0.crossJoin(broadcast(maxW))
-      .select(col("a"), col("b"), (col("mw") + 1 - col("w")).as("c"))
-      .cache()
-    val hub = e.select(col("src").as("entity_id"), col("weight"))
-      .union(e.select(col("dst"), col("weight")))
-      .groupBy("entity_id").agg(sum("weight").as("degree"))
-      .orderBy(desc("degree"), asc("entity_id")).limit(1)
-      .select(col("entity_id").as("hub"))
-      .localCheckpoint(true)
-    var best = hub.join(sym, col("hub") === col("a"))
-      .select(col("b").as("entity_id"), col("c").as("cost"))
-      .localCheckpoint(true)
-    var frontier = best
-    var hop = 1
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      val cand = frontier.join(sym, frontier("entity_id") === sym("a"))
-        .join(hub, col("b") === col("hub"), "left_anti")
-        .select(col("b").as("entity_id"), (col("cost") + col("c")).as("s"))
-        .groupBy("entity_id").agg(min("s").as("s"))
-      val improved = cand.join(best.withColumnRenamed("entity_id", "be")
-          .withColumnRenamed("cost", "bc"),
-          col("entity_id") === col("be"), "left_outer")
-        .filter(col("bc").isNull || col("s") < col("bc"))
-        .select(col("entity_id"), col("s").as("cost"))
-        .localCheckpoint(true)
-      best = best.join(improved.select(col("entity_id").as("ie")),
-          col("entity_id") === col("ie"), "left_anti")
-        .select("entity_id", "cost")
-        .union(improved)
-        .localCheckpoint(true)
-      frontier = improved
-    }
-    sym.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    best.orderBy(asc("cost"), asc("entity_id"))
-  }
+  def shortestTiePaths(edges: DataFrame, maxHops: Int = bfsMaxHops): DataFrame =
+    hubWalk(edges, "cost", nullable = true) { (hub, adj) =>
+      val maxW1 = Math.addExact(adj.valuesIterator.flatMap(_.valuesIterator).max, 1L)
+      relax(adj, hub, maxHops.max(1), 0L, Map.empty)(
+        (s, w) => Math.addExact(s, Math.subtractExact(maxW1, w)), _ < _)
+    }.sortWithinPartitions(asc("cost"), asc("entity_id"))
 
   val kCoreMaxK = 16
 
@@ -691,8 +615,8 @@ object GraphOps {
     * — the structural complement to q89/q35's communities (who clusters
     * with whom) and q110's hops (how far): how DEEP each entity sits.
     *
-    * Classical peeling, DataFrame-iterative like [[widestPaths]]: for
-    * k = 1, 2, … repeatedly drop vertices whose current degree < k
+    * Classical peeling as distributed DataFrame rounds (the production
+    * peel; [[kCoreExact]] is its one-task twin): for k = 1, 2, … repeatedly drop vertices whose current degree < k
     * (cascading — each peel round is one degree aggregation + two
     * anti-joins, all keyed on the vertex); vertices peeled while
     * testing k have core number k−1. Rounds are lineage-cut with eager
@@ -775,8 +699,7 @@ object GraphOps {
     *
     * Scale: the recursion runs on the lexicon-bounded AGGREGATED graph
     * (|V| ≤ lexicon size no matter the corpus volume), so the twin
-    * executes it as ONE executor task over that bounded frame — the
-    * sanctioned [[louvain]] collapse (`coalesce(1).mapPartitions`):
+    * executes it as one [[inOneTask]] kernel over that bounded frame:
     * 128 near-empty distributed rounds would be pure scheduling
     * overhead, and a graph too big for one task is the regime where
     * q118's distributed peel is the right tool anyway. Only the
@@ -786,41 +709,28 @@ object GraphOps {
     kCoreExactCore(CooccurrenceGraph.edgeCounts(spark, dir))
 
   /** Core over any (src, dst, weight) edge frame — fixture seam. */
-  private[graft] def kCoreExactCore(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val maxK = kCoreMaxK
-    val rounds = kCoreCascadeRounds
-    val memb = edges.toDF("src", "dst", "weight")
-      .select("src", "dst")
-      .as[(String, String)](
-        org.apache.spark.sql.Encoders.product[(String, String)])
-      .rdd.coalesce(1)
-      .mapPartitions { it =>
-        val sym = it.toSeq.flatMap { case (s, d) => Seq((s, d), (d, s)) }
-          .distinct
-        val allV = sym.map(_._1).distinct
-        val core = scala.collection.mutable.Map.empty[String, Long]
-        allV.foreach(v => core(v) = 0L)
-        var g = sym
-        var k = 1
-        while (k <= maxK && g.nonEmpty) {
-          var r = 0
-          while (r < rounds && g.nonEmpty) {
-            val deg = g.groupBy(_._1).view.mapValues(_.size).toMap
-            val next = g.filter { case (a, b) =>
-              deg.getOrElse(a, 0) >= k && deg.getOrElse(b, 0) >= k }
-            // a no-op round fixes the whole remaining cascade at this k
-            r = if (next.size == g.size) rounds else r + 1
-            g = next
-          }
-          g.map(_._1).distinct.foreach(v => core(v) = k.toLong)
-          k += 1
+  private[graft] def kCoreExactCore(edges: DataFrame): DataFrame =
+    inOneTask(edges, StructType(Seq(StructField("entity_id", StringType),
+        StructField("core", LongType, nullable = false)))) { es =>
+      val sym = es.flatMap { case (s, d, _) => Seq((s, d), (d, s)) }.distinct
+      val core = mutable.Map(sym.map(_._1 -> 0L): _*)
+      var g = sym
+      var k = 1
+      while (k <= kCoreMaxK && g.nonEmpty) {
+        var r = 0
+        while (r < kCoreCascadeRounds && g.nonEmpty) {
+          val deg = g.groupBy(_._1).view.mapValues(_.size).toMap
+          val next = g.filter { case (a, b) =>
+            deg.getOrElse(a, 0) >= k && deg.getOrElse(b, 0) >= k }
+          // a no-op round fixes the whole remaining cascade at this k
+          r = if (next.size == g.size) kCoreCascadeRounds else r + 1
+          g = next
         }
-        core.iterator.map { case (v, c) => (v, c) }
+        g.foreach(e => core(e._1) = k.toLong)
+        k += 1
       }
-    spark.createDataFrame(memb).toDF("entity_id", "core")
-      .orderBy(desc("core"), asc("entity_id"))
-  }
+      core.iterator.map { case (v, c) => Row(v, c) }
+    }.sortWithinPartitions(desc("core"), asc("entity_id"))
 
   val lpaIters = 10
 
@@ -918,25 +828,19 @@ object GraphOps {
     * Scale: like LPA/PageRank the optimization runs on the AGGREGATED
     * co-occurrence graph, which is lexicon-bounded (|V| ≤ lexicon size)
     * no matter the corpus volume — only the upstream edge aggregation
-    * scales with data. The sequential climb runs as ONE executor task
-    * over that bounded graph (`coalesce(1).mapPartitions`, the same
-    * collapse [[edgeGraph]] applies for Pregel: 32 near-empty partitions
-    * are pure scheduling overhead) — no driver collect, no per-round
-    * job scheduling. A graph too big for one task is the regime where
+    * scales with data. The sequential climb runs as one [[inOneTask]]
+    * kernel over that bounded graph (near-empty partitions would be
+    * pure scheduling overhead) — no driver collect, no per-round job
+    * scheduling. A graph too big for one task is the regime where
     * sequential Louvain itself stops being meaningful; [[labelPropagation]]
     * is the fully-distributed fallback there.
     */
-  def louvain(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val memb = edges.toDF("src", "dst", "weight")
-      .select("src", "dst", "weight")
-      .as[(String, String, Long)](
-        org.apache.spark.sql.Encoders.product[(String, String, Long)])
-      .rdd.coalesce(1)
-      .mapPartitions { it =>
-        louvainPasses(it.toSeq).lastOption.getOrElse(Map.empty).iterator
-      }
-    spark.createDataFrame(memb).toDF("entity_id", "community")
+  def louvain(edges: DataFrame): DataFrame =
+    inOneTask(edges, StructType(Seq(StructField("entity_id", StringType),
+        StructField("community", StringType)))) { es =>
+      louvainPasses(es).lastOption.getOrElse(Map.empty)
+        .iterator.map { case (v, c) => Row(v, c) }
+    }
       .groupBy("community")
       .agg(sort_array(collect_list("entity_id")).as("members"),
         count(lit(1)).as("n_members"))
@@ -944,7 +848,6 @@ object GraphOps {
       .select(col("community").as("community_rep"), col("members"),
         col("n_members"))
       .orderBy(desc("n_members"), asc("community_rep"))
-  }
 
   /** The sequential Louvain climb: membership (entity → community rep)
     * AFTER EACH PASS, so the spec can assert the per-pass modularity

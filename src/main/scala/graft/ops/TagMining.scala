@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.fpm.FPGrowth
-import graft.Tables
+import graft.{RefData, Tables}
 
 /** Frequent-itemset / association-rule mining — the reference's tag
   * pipeline (tag/main.py:187-194: pyspark.ml.fpm.FPGrowth,
@@ -148,7 +148,7 @@ object TagMining {
     * proving unicode identifiers survive every layer (quoting, parquet
     * field names, the driver's sort-columns-by-name hash).
     */
-  val animeCsvPath = "/root/repo/refdata/anime/data.csv"
+  val animeCsvPath = RefData.path("anime/data.csv")
 
   /** All-string scan (the reference passes inferSchema=true at
     * tag/main.py:45; typed derivation below is explicit instead, so

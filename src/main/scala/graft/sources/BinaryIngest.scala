@@ -189,7 +189,7 @@ object BinaryIngest {
     * episode CSV by [[graft.tools.SegmentFixture]] (6-minute paging like
     * the crawler's segment_index fetches, spider_worker.py:29-37).
     */
-  val segmentsGlob = "/root/repo/refdata/segments/seg_*.bin"
+  val segmentsGlob = graft.RefData.path("segments/seg_*.bin")
 
   /** q83: binaryFile scan → wire decode → projection. Hash-checked
     * against DuckDB reading the fixture's SOURCE CSV, so the decoder

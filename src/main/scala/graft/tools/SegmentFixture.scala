@@ -26,7 +26,7 @@ object SegmentFixture {
 
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else graft.RefData.spyEpisodeCsv
-    val outDir = if (args.length > 1) args(1) else "/root/repo/refdata/segments"
+    val outDir = if (args.length > 1) args(1) else graft.RefData.path("segments")
     val spark = graft.GraftSession.build(graft.GraftSession.cpus)
     try {
       // 27k rows: driver-side collect is fine for a fixture tool (the

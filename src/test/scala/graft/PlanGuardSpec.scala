@@ -34,15 +34,14 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestBase {
     // single-row corpus token total
     "q111_pmi_collocations",
     // round-8 batch: every crossJoin below broadcasts a SINGLE-ROW
-    // frame (data-derived cutoff, quantile-boundary row, global total,
-    // or max edge weight) into the scan stage — the sanctioned
+    // frame (data-derived cutoff, quantile-boundary row or global
+    // total) into the scan stage — the sanctioned
     // boundary-broadcast pattern, not a pair blowup
     "q135_cdc_merge",            // (min+max)/2 cutoff row
     "q137_rfm_segments",         // global last day + 3 quartile rows
     "q141_decile_lift",          // decile-boundary row
     "q142_distribution_drift",   // cutoff + boundary row + totals row
     "q143_revenue_concentration", // totals row
-    "q147_shortest_tie_paths",   // max-edge-weight row
     // round-9 batch: same sanctioned single-row boundary broadcasts
     "q158_independence_lift",    // global event-count row
     "q160_hll_mergeability",     // global exact-distinct row

@@ -1,12 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference-input declarations that the whole-surface specs
   * (PlanGuardSpec, SparkEntrySpec, OracleTypeSpec) trust to leave out
-  * only what the unmounted corpus makes unrunnable.
+  * only what the unmounted corpus makes unrunnable, and a sweep that
+  * keeps every refdata path relative to the checkout the engine runs in.
   */
 class RefDataSpec extends AnyFunSuite with SparkTestBase {
 
@@ -55,6 +58,23 @@ class RefDataSpec extends AnyFunSuite with SparkTestBase {
         SparkEntry.queries(name)(spark, sf))
       assert(e.getMessage == RefData.notMounted(paths.head), name)
     }
+  }
+
+  test("no main source names an absolute checkout or refdata path; fixtures resolve here") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(files.size > 50, s"sweep found ${files.size} files")
+    val checkout = "\"" + Paths.get("").toAbsolutePath
+    val refdataLiteral = "\"/[^\"\\s]*/refdata/".r
+    val offenders = files.filter { p =>
+      val text = Files.readString(p)
+      text.contains(checkout) || refdataLiteral.findFirstIn(text).nonEmpty
+    }
+    assert(offenders.isEmpty, s"use RefData.path instead:\n${offenders.mkString("\n")}")
+    val here = Paths.get("refdata").toAbsolutePath.toString
+    Seq(graft.ops.TagMining.animeCsvPath, graft.sources.BinaryIngest.segmentsGlob)
+      .foreach(p => assert(p.startsWith(here) && RefData.present(p), p))
   }
 }
 
