@@ -24,7 +24,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * Bench times, which re-plans from the analyzed plan), plus the wall
   * around all four. `sql` counts the SQL executions the run started:
   * the noop write is one, and a builder's eager work (a checkpoint, an
-  * `isEmpty`) adds its own. Stages: tasks, wall, executor CPU, input
+  * `isEmpty`) adds its own. `jobs` counts the jobs the run's driver
+  * thread started. Stages: tasks, wall, executor CPU, input
   * bytes, shuffle read and write bytes, disk spill. Rep 1 pays codegen
   * and JIT.
   * `procs` counts the operating-system processes the JVM started during
@@ -47,7 +48,7 @@ object Probe {
 
   final case class Run(query: String, rep: Int, buildNs: Long,
       optimizeNs: Long, planNs: Long, execNs: Long, wallNs: Long,
-      sqlExecutions: Int, procs: Long, stages: Seq[Stage])
+      sqlExecutions: Int, jobs: Int, procs: Long, stages: Seq[Stage])
 
   /** `body`'s result and the number of processes the JVM started while it
     * ran, from a JFR recording of `jdk.ProcessStart` events alone.
@@ -66,7 +67,7 @@ object Probe {
     } finally rec.close()
   }
 
-  /** Collects the stages and SQL executions of one job group. */
+  /** Collects the jobs, stages and SQL executions of one job group. */
   private final class GroupListener(group: String) extends SparkListener {
     private val stageIds = mutable.Set.empty[Int]
     private var executions = 0
@@ -109,16 +110,16 @@ object Probe {
     }
 
     /** Blocks until this listener has seen every job of the group end, then
-      * returns the group's SQL execution count and stages. The listener
-      * bus delivers a job's stage events, and the start of the execution
-      * that ran it, before its end, so none is dropped or left for the
-      * next run. Job ids come from the status tracker and from this
+      * returns the group's SQL execution count, job count and stages. The
+      * listener bus delivers a job's stage events, and the start of the
+      * execution that ran it, before its end, so none is dropped or left
+      * for the next run. Job ids come from the status tracker and from this
       * listener's own job starts, whichever of the two queues is ahead.
       */
-    def drain(sc: SparkContext): (Int, Seq[Stage]) = synchronized {
+    def drain(sc: SparkContext): (Int, Int, Seq[Stage]) = synchronized {
       def jobs = sc.statusTracker.getJobIdsForGroup(group).toSet ++ started
       while (!jobs.subsetOf(ended)) wait()
-      (executions, stages.sortBy(_.id).toSeq)
+      (executions, jobs.size, stages.sortBy(_.id).toSeq)
     }
   }
 
@@ -146,9 +147,9 @@ object Probe {
         val (exec, _) = timed(df.write.format("noop").mode("overwrite").save())
         (build, optimize, plan, exec, System.nanoTime() - start, df)
       }
-      val (executions, stages) = listener.drain(sc)
-      (Run(name, rep, build, optimize, plan, exec, wall, executions, procs,
-        stages), df)
+      val (executions, jobs, stages) = listener.drain(sc)
+      (Run(name, rep, build, optimize, plan, exec, wall, executions, jobs,
+        procs, stages), df)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -159,7 +160,7 @@ object Probe {
     def s(ns: Long) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(ns / 1e9))
     val phase = s"[phase] rep${r.rep} ${r.query} build=${s(r.buildNs)} " +
       s"optimize=${s(r.optimizeNs)} plan=${s(r.planNs)} exec=${s(r.execNs)} " +
-      s"wall=${s(r.wallNs)} s sql=${r.sqlExecutions} procs=${r.procs}"
+      s"wall=${s(r.wallNs)} s sql=${r.sqlExecutions} jobs=${r.jobs} procs=${r.procs}"
     phase +: r.stages.map(st =>
       s"[stage] rep${r.rep} ${r.query} id=${st.id} tasks=${st.tasks} " +
         s"wall=${s(st.wallMs * 1000000L)} cpu=${s(st.cpuNs)} in=${st.inputBytes} " +

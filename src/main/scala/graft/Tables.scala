@@ -292,6 +292,44 @@ object Tables {
     if (hits.exists(identity)) spreadCompressionDivisor else 1L
   }
 
+  /** Runs `body` with the session confs `kv` set, then restores each key
+    * as it found it, also when `body` throws: a key that was set gets its
+    * value back, a key that was unset is unset again. "Set" means set on
+    * the session (`getAll`): `getOption` also answers a registered key's
+    * default, and restoring that would pin the default on the session.
+    * Session-global, so sound while queries run one at a time (Verify,
+    * Bench and the specs); a shared session would need
+    * `spark.newSession()`. Work that must be planned under the confs has
+    * to run inside `body`, e.g. a [[detached]] result's checkpoint.
+    */
+  def withConfs[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = kv.map { case (k, _) => k -> set.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `body`'s result, detached from the scratch tree it was built over:
+    * a fresh `prefix*` temp directory is handed to `body`, the frame it
+    * returns is materialized with an eager `localCheckpoint`, and the
+    * tree is deleted, also when `body` throws. For results read from
+    * files written under the tree (staged layouts, stream sinks).
+    *
+    * The checkpoint is unconditional, unlike [[boundedCheckpoint]]: the
+    * tree is gone once this returns, so a result left to recompute from
+    * lineage would read deleted files. Keep what the frame holds small
+    * (the registered queries return aggregates or sink rows) and apply
+    * cheap projections and orderings after this returns.
+    */
+  def detached(prefix: String)(body: java.nio.file.Path => DataFrame): DataFrame = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    try body(base).localCheckpoint(true)
+    finally deleteRecursively(base)
+  }
+
   /** Recursively delete a scratch tree (staging layouts, streaming
     * checkpoints). Deepest-first; the walk drains before the first
     * delete so the traversal never sees its own deletions.

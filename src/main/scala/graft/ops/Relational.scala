@@ -619,27 +619,16 @@ object Relational {
           .cast("decimal(18,4)")).cast("double"), 4).as("revenue"))
       .orderBy("l_returnflag")
 
-  /** Scoped confs that make InjectRuntimeFilter fire at test scale:
-    * broadcast off (both sides big → the shuffle join the rewrite
-    * targets) and the application-side scan floor dropped to 0 (its
-    * 10 GB default assumes a cluster; the REWRITE under test is
-    * size-independent). Restored via getOption so previously-unset
-    * keys stay unset (the q155 discipline).
+  /** The confs, scoped with [[Tables.withConfs]], that make
+    * InjectRuntimeFilter fire at test scale: broadcast off (both sides
+    * big → the shuffle join the rewrite targets) and the
+    * application-side scan floor dropped to 0 (its 10 GB default
+    * assumes a cluster; the REWRITE under test is size-independent).
     */
-  private[graft] def withRuntimeBloomConfs[T](s: SparkSession)(body: => T): T = {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  private[graft] val runtimeBloomConfs = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   /** q175 — OPTIMIZER-INJECTED runtime bloom filter: q126's pattern,
     * but the ENGINE does the rewriting. The plan is a plain declarative
@@ -660,7 +649,7 @@ object Relational {
     * plan, absent with the rewrite disabled.
     */
   val runtimeBloomJoin: Q = (s, d) =>
-    withRuntimeBloomConfs(s) {
+    Tables.withConfs(s, runtimeBloomConfs: _*) {
       runtimeBloomJoined(s, d).localCheckpoint(true)
     }
 

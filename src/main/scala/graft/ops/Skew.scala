@@ -525,10 +525,8 @@ object Skew {
     * ~1/joinSaltFactor of the hot key. The oracle runs the PLAIN join —
     * salting must be semantically invisible.
     */
-  def saltedSkewJoin(spark: SparkSession, dir: String): DataFrame = {
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+  def saltedSkewJoin(spark: SparkSession, dir: String): DataFrame =
+    Tables.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ev = Tables.eventsMicros(spark, dir).select(
         expr(skewedKeySql("user_id")).as("k"),
         col("event_id"), col("event_type"), col("value"))
@@ -545,13 +543,7 @@ object Skew {
         .orderBy("event_type")
       // materialize while broadcast is still pinned off
       out.localCheckpoint(true)
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None =>
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-  }
 
   /** The q161 audited columns. */
   private[graft] val statColumns =

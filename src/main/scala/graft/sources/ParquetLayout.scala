@@ -50,22 +50,18 @@ object ParquetLayout {
     * incl. the value doubles) AND the pruned read sees exactly the
     * filtered rows.
     */
-  def partitionPrunedRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q103_")
-    try {
+  def partitionPrunedRevenue(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q103_") { base =>
       val layout = base.resolve("events_by_type").toString
       stageLayout(spark, dir, layout)
-      val out = prunedPurchases(spark, layout)
+      prunedPurchases(spark, layout)
         .groupBy("user_id")
         .agg(
           count(lit(1)).as("n_purchases"),
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("purchase_total"))
         .orderBy("user_id")
-      // materialize off the scratch layout before the finally deletes it
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** q125 — ORC interchange: the same events slice round-tripped
     * through the OTHER first-class columnar warehouse format (write
@@ -78,14 +74,13 @@ object ParquetLayout {
     * ORC predicate pushdown rides the same filter the q103 layout
     * prunes by (row-group level here; asserted in ParquetLayoutSpec).
     */
-  def orcInterchangeRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q125_")
-    try {
+  def orcInterchangeRevenue(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q125_") { base =>
       val path = base.resolve("events_orc").toString
       Tables.eventsMicros(spark, dir)
         .select("event_id", "user_id", "tsu", "value", "event_type")
         .write.orc(path)
-      val out = spark.read.orc(path)
+      spark.read.orc(path)
         .filter(col("event_type") === "purchase")
         .groupBy("user_id")
         .agg(
@@ -93,9 +88,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("purchase_total"))
         .orderBy("user_id")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** The deterministic v1/v2 shard assignment for q131 — md5-nibble on
     * event_id (the q58/q59 content-keyed discipline), 8/16 each.
@@ -118,9 +111,8 @@ object ParquetLayout {
     * q103/q125: production points the same reader at a long-lived
     * two-epoch table.
     */
-  def schemaEvolutionRollup(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q131_")
-    try {
+  def schemaEvolutionRollup(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q131_") { base =>
       val ev = Tables.eventsMicros(spark, dir).withColumn("v1", schemaEpochSplit)
       val v1 = base.resolve("epoch_v1").toString
       val v2 = base.resolve("epoch_v2").toString
@@ -130,7 +122,7 @@ object ParquetLayout {
       ev.filter(!col("v1"))
         .select("event_id", "user_id", "tsu", "value", "event_type")
         .write.parquet(v2)
-      val out = spark.read.option("mergeSchema", "true").parquet(v1, v2)
+      spark.read.option("mergeSchema", "true").parquet(v1, v2)
         .groupBy(coalesce(col("event_type"), lit("__pre_schema__"))
           .as("event_type"))
         .agg(
@@ -139,9 +131,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** Stage a copy of events CLUSTERED on `tsu`: range-partitioned so
     * each output file owns a disjoint time slice, sorted inside so each
@@ -183,13 +173,12 @@ object ParquetLayout {
     * from the staged footers: the clustered copy's intersecting
     * row-group set is a strict subset of the scattered copy's.
     */
-  def clusteredLayoutScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q132_")
-    try {
+  def clusteredLayoutScan(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q132_") { base =>
       val path = base.resolve("events_by_time").toString
       stageClustered(spark, dir, path, 8)
       val (plo, phi) = probeBounds(spark, dir)
-      val out = spark.read.parquet(path)
+      spark.read.parquet(path)
         .filter(col("tsu") >= plo && col("tsu") < phi)
         .groupBy("event_type")
         .agg(
@@ -198,9 +187,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** On-disk bytes and file count of a parquet directory (driver-side
     * listing — the same caveat as Tables.parquetRowCount: fine for a
@@ -242,9 +229,8 @@ object ParquetLayout {
     * the mechanics (file count collapses, rows conserved, no shuffle in
     * the compaction plan).
     */
-  def compactionRollup(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q134_")
-    try {
+  def compactionRollup(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q134_") { base =>
       val frag = base.resolve("fragmented").toString
       val comp = base.resolve("compacted").toString
       Tables.eventsMicros(spark, dir)
@@ -252,7 +238,7 @@ object ParquetLayout {
         .repartition(64)
         .write.parquet(frag)
       compact(spark, frag, comp, targetBytes = 4L << 20)
-      val out = spark.read.parquet(comp)
+      spark.read.parquet(comp)
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -260,9 +246,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** 16-bit×16-bit Morton interleave: bit i of the user rank lands at
     * position 2i+1, bit i of the time rank at 2i — the Z-VALUE whose
@@ -347,16 +331,15 @@ object ParquetLayout {
     * spec proves the mechanism from the staged footers on BOTH
     * dimensions.
     */
-  def zorderScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q165_")
-    try {
+  def zorderScan(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q165_") { base =>
       val path = base.resolve("events_zorder").toString
       // one bounds aggregation feeds both the rank normalization and
       // the probe rectangle — zBounds is a full-table scan
       val bounds = zBounds(spark, dir)
       stageZOrdered(spark, dir, path, 16, bounds)
       val (pul, puh, ptl, pth) = zProbeBoundsFrom(bounds)
-      val out = spark.read.parquet(path)
+      spark.read.parquet(path)
         .filter(col("user_id") >= pul && col("user_id") < puh
           && col("tsu") >= ptl && col("tsu") < pth)
         .groupBy("event_type")
@@ -366,9 +349,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** Stage orders + lineitem as BUCKETED tables (8 buckets on the join
     * key, sorted within) rooted at `base` — seam for q155 and its spec.
@@ -428,34 +409,25 @@ object ParquetLayout {
     * semantically invisible.
     */
   def bucketedJoinRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q155_")
-    val (ordersTbl, lineitemTbl) = bucketedNames(base)
-    // getOption, not get: `get` resolves the DEFAULT when the key is
-    // unset, and restoring that would pin a previously-unset key
-    val prevThreshold =
-      spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      stageBucketed(spark, dir, base)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val out = bucketedJoined(spark, base)
-        .groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n_lines"),
-          countDistinct(col("o_orderkey")).as("n_orders"),
-          round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(18,4)")).cast("double"), 4).as("revenue"))
-        .orderBy("o_orderstatus")
-      out.localCheckpoint(true)
-    } finally {
-      prevThreshold match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-        case None =>
-          spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    var staged = Option.empty[java.nio.file.Path]
+    // the checkpoint in `detached` runs while broadcast is still off;
+    // the catalog entries go once the result no longer reads them
+    try Tables.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      Tables.detached("graft_q155_") { base =>
+        staged = Some(base)
+        stageBucketed(spark, dir, base)
+        bucketedJoined(spark, base)
+          .groupBy("o_orderstatus")
+          .agg(
+            count(lit(1)).as("n_lines"),
+            countDistinct(col("o_orderkey")).as("n_orders"),
+            round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+              .cast("decimal(18,4)")).cast("double"), 4).as("revenue"))
+          .orderBy("o_orderstatus")
       }
-      spark.sql(s"DROP TABLE IF EXISTS $ordersTbl")
-      spark.sql(s"DROP TABLE IF EXISTS $lineitemTbl")
-      Tables.deleteRecursively(base)
+    } finally staged.map(bucketedNames).foreach { case (o, l) =>
+      spark.sql(s"DROP TABLE IF EXISTS $o")
+      spark.sql(s"DROP TABLE IF EXISTS $l")
     }
   }
 
@@ -494,9 +466,8 @@ object ParquetLayout {
     * anyway. The oracle joins the ORIGINAL flat table to the same
     * literal dim — pruning must be semantically invisible.
     */
-  def dynamicPartitionPruning(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q166_")
-    try {
+  def dynamicPartitionPruning(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q166_") { base =>
       val factPath = base.resolve("events_by_type").toString
       val dimPath = base.resolve("type_dim").toString
       stageLayout(spark, dir, factPath)
@@ -504,7 +475,7 @@ object ParquetLayout {
       import s.implicits._
       typeCategories.toDF("event_type", "category")
         .coalesce(1).write.parquet(dimPath)
-      val out = dppJoined(spark, factPath, dimPath)
+      dppJoined(spark, factPath, dimPath)
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -512,9 +483,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** q167 — DYNAMIC PARTITION OVERWRITE (idempotent backfill): the
     * write-side twin of q103 and the routine 100 TB maintenance op —
@@ -529,13 +498,12 @@ object ParquetLayout {
     * mechanism: untouched partitions keep byte-identical file listings
     * (names, sizes), and static mode really would have dropped them.
     */
-  def backfillOverwrite(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q167_")
-    try {
+  def backfillOverwrite(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q167_") { base =>
       val path = base.resolve("events_by_type").toString
       stageLayout(spark, dir, path)
       replayPartition(spark, dir, path, "purchase")
-      val out = spark.read.parquet(path)
+      spark.read.parquet(path)
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -543,9 +511,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** Replay ONE partition's data into an existing partitioned layout
     * with dynamic overwrite — only partitions present in the incoming
@@ -585,9 +551,8 @@ object ParquetLayout {
     * direction lost a ulp the decimal-cast revenue sum would
     * hash-mismatch.
     */
-  def jsonlInterchangeRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q217_")
-    try {
+  def jsonlInterchangeRevenue(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q217_") { base =>
       val path = base.resolve("events_jsonl").toString
       Tables.eventsMicros(spark, dir)
         .select("event_id", "user_id", "tsu", "value", "event_type")
@@ -598,7 +563,7 @@ object ParquetLayout {
         org.apache.spark.sql.types.StructField("tsu", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType)))
-      val out = spark.read.schema(schema).json(path)
+      spark.read.schema(schema).json(path)
         .filter(col("event_type") === "purchase")
         .groupBy("user_id")
         .agg(
@@ -606,18 +571,15 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("purchase_total"))
         .orderBy("user_id")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
-  def avroInterchangeRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q170_")
-    try {
+  def avroInterchangeRevenue(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q170_") { base =>
       val path = base.resolve("events_avro").toString
       Tables.eventsMicros(spark, dir)
         .select("event_id", "user_id", "tsu", "value", "event_type")
         .write.format("org.apache.spark.sql.avro.AvroFileFormat").save(path)
-      val out = spark.read.format("org.apache.spark.sql.avro.AvroFileFormat").load(path)
+      spark.read.format("org.apache.spark.sql.avro.AvroFileFormat").load(path)
         .filter(col("event_type") === "purchase")
         .groupBy("user_id")
         .agg(
@@ -625,9 +587,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("purchase_total"))
         .orderBy("user_id")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** All parquet data files under a (possibly partitioned) layout,
     * recursively, sorted for determinism. Driver-side listing is
@@ -684,9 +644,8 @@ object ParquetLayout {
     * from the ORIGINAL flat table (v2 = all non-error rows), so
     * snapshot selection is proven semantically exact.
     */
-  def snapshotTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q171_")
-    try {
+  def snapshotTimeTravel(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q171_") { base =>
       val data = base.resolve("data").toString
       stageLayout(spark, dir, data)
       val manifests = Files.createDirectory(base.resolve("manifests"))
@@ -697,7 +656,7 @@ object ParquetLayout {
       def snap(v: Int): DataFrame =
         snapshotRead(spark, data, manifests, v)
           .withColumn("version", lit(s"v$v"))
-      val out = snap(1).unionByName(snap(2))
+      snap(1).unionByName(snap(2))
         .groupBy("version", "event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -705,9 +664,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("version", "event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** Per-file (path, min, max) of `column`, read from the parquet
     * footers at COMMIT time — the stats a lakehouse writer records
@@ -758,14 +715,13 @@ object ParquetLayout {
     * q132; the oracle recomputes the same content-derived window over
     * the ORIGINAL flat table, proving file selection dropped no rows.
     */
-  def manifestPrunedScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q172_")
-    try {
+  def manifestPrunedScan(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q172_") { base =>
       val path = base.resolve("events_by_time").toString
       stageClustered(spark, dir, path, 8)
       val (plo, phi) = probeBounds(spark, dir)
       val picked = pruneByStats(fileStats(spark, path, "tsu"), plo, phi)
-      val out = spark.read.parquet(picked: _*)
+      spark.read.parquet(picked: _*)
         .filter(col("tsu") >= plo && col("tsu") < phi)
         .groupBy("event_type")
         .agg(
@@ -774,9 +730,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** The q173 delete predicate — a sparse user-keyed purge (every
     * 97th user), the GDPR-delete shape: rows scattered across every
@@ -824,14 +778,13 @@ object ParquetLayout {
     * exactly the predicate's rows and the anti-join must drop exactly
     * those.
     */
-  def deletionVectorScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q173_")
-    try {
+  def deletionVectorScan(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q173_") { base =>
       val data = base.resolve("data").toString
       stageClustered(spark, dir, data, 8)
       val dv = base.resolve("deletes").toString
       commitDeleteVector(spark, data, dv)
-      val out = dvRead(spark, data, dv)
+      dvRead(spark, data, dv)
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -839,9 +792,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** q176 — VACUUM / SNAPSHOT RETENTION: the garbage collector of the
     * q171 store. Time travel keeps superseded files alive as long as a
@@ -858,9 +809,8 @@ object ParquetLayout {
     * read error or a hash mismatch. The spec pins the other half: the
     * orphans are actually gone from disk and only they are.
     */
-  def vacuumRetention(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q176_")
-    try {
+  def vacuumRetention(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q176_") { base =>
       val data = base.resolve("data").toString
       stageLayout(spark, dir, data)
       val manifests = Files.createDirectory(base.resolve("manifests"))
@@ -869,7 +819,7 @@ object ParquetLayout {
       val v2Files = v1Files.filterNot(_.contains("event_type=error"))
       writeManifest(manifests, 2, v2Files)
       vacuumTo(spark, data, keep = v2Files.toSet)
-      val out = snapshotRead(spark, data, manifests, 2)
+      snapshotRead(spark, data, manifests, 2)
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -877,9 +827,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** The row-level diff between two snapshots, derived from their
     * manifests alone: rows in files REMOVED between the versions are
@@ -927,9 +875,8 @@ object ParquetLayout {
     * under the new label; the oracle re-derives both sides from the
     * ORIGINAL flat table.
     */
-  def snapshotChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q178_")
-    try {
+  def snapshotChangeFeed(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q178_") { base =>
       val data = base.resolve("data").toString
       stageLayout(spark, dir, data)
       val manifests = Files.createDirectory(base.resolve("manifests"))
@@ -941,16 +888,14 @@ object ParquetLayout {
         .write.mode("append").partitionBy("event_type").parquet(data)
       writeManifest(manifests, 2,
         listDataFiles(spark, data).filterNot(errFiles.contains))
-      val out = snapshotDiff(spark, data, manifests, 1, 2)
+      snapshotDiff(spark, data, manifests, 1, 2)
         .groupBy("change_type", "event_type")
         .agg(
           count(lit(1)).as("n_rows"),
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("change_type", "event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   private[graft] val usPerDay = graft.ops.Changelog.usPerDay
 
@@ -996,9 +941,8 @@ object ParquetLayout {
     * the asymmetry: the fine scan opens only the probe day's
     * directories while the coarse scan cannot directory-prune on day.
     */
-  def partitionEvolutionScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q180_")
-    try {
+  def partitionEvolutionScan(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q180_") { base =>
       val ev = Tables.eventsMicros(spark, dir)
         .select("event_id", "user_id", "tsu", "value", "event_type")
       val cut = evolutionCut(spark, dir)
@@ -1009,7 +953,7 @@ object ParquetLayout {
       ev.filter(col("tsu") >= cut)
         .withColumn("day", expr(s"tsu div $usPerDay"))
         .write.partitionBy("event_type", "day").parquet(finePath)
-      val out = evolvedTable(spark, coarsePath, finePath)
+      evolvedTable(spark, coarsePath, finePath)
         .filter(col("day") === cut / usPerDay)
         .groupBy("event_type")
         .agg(
@@ -1018,9 +962,7 @@ object ParquetLayout {
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
         .orderBy("event_type")
-      out.localCheckpoint(true)
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** Stage a candidate batch as data files that NO manifest references
     * yet: physically present, logically invisible to every snapshot
@@ -1053,9 +995,8 @@ object ParquetLayout {
     * pins the isolation (staged files invisible pre-publish, published
     * rows visible after, rejected rows never) and the orphan cleanup.
     */
-  def writeAuditPublish(spark: SparkSession, dir: String): DataFrame = {
-    val base = Files.createTempDirectory("graft_q179_")
-    try {
+  def writeAuditPublish(spark: SparkSession, dir: String): DataFrame =
+    Tables.detached("graft_q179_") { base =>
       val data = base.resolve("data").toString
       val orders = Tables.orders(spark, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -1093,8 +1034,7 @@ object ParquetLayout {
           if (dupReplay == 0) "published" else "rejected"))
         .toDF("batch", "n_rows", "n_dup_keys", "verdict")
         .orderBy("batch")
-    } finally Tables.deleteRecursively(base)
-  }
+    }
 
   /** Delete every data file under `data` not in the reachable set.
     * Returns the deleted paths (the spec asserts on them).

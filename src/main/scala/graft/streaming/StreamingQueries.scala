@@ -1,18 +1,18 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.ops.{Sessionization, TextAnalysis}
+import StagedInputs.stageOne
 
 /** Driver-gated registrations of the §2.9 streaming surface: each query
   * here executes through the REAL streaming engine (MicroBatchExecution,
@@ -54,106 +54,64 @@ object StreamingQueries {
 
   private val sinkSeq = new AtomicInteger(0)
 
-  /** Every query here wraps its RUN-scoped scratch (checkpoint, sink)
-    * in try/finally over a `Files.createTempDirectory` base, so a
-    * long-lived session (or the spec suite's repeated invocations)
-    * accumulates no per-run state — the round-7 leak: four trees per
-    * full verify/bench run, never reclaimed. Results that live in the
-    * run tree (parquet sinks) are localCheckpoint-materialized BEFORE
-    * the delete; memory-sink results live on the driver and need
-    * nothing. Staged INPUT trees are cached for the process lifetime
-    * ([[StagedInputs]]) and reclaimed by its shutdown hook.
+  /** Progress of the latest invocation of each query, by query id
+    * ("q98"): one entry per drained run, in run order (q128 drains
+    * twice), each the run's own `recentProgress`. The specs read batch
+    * counts, watermark drops and input rows from here, and q100 its
+    * drop tally. Every run here is at most 10 micro-batches, well under
+    * the 100 progress updates a query keeps.
     */
-  private def deleteRecursively(p: Path): Unit = Tables.deleteRecursively(p)
+  private val recorded =
+    new ConcurrentHashMap[String, Vector[Seq[StreamingQueryProgress]]]()
 
-  /** Process-lifetime cache of staged stream-input trees (r12 verdict
-    * task 4). Staging is verification plumbing — a Spark write plus
-    * file copies of the source table, a pure function of (query,
-    * source dir) within one JVM — yet it used to run PER INVOCATION,
-    * so the bench's second rep (and every spec re-run) re-measured
-    * `Files.copy`, not micro-batch execution: ~100 s of the r12
-    * bench's 617 s total was repeated staging I/O. Each tree is now
-    * built once per (query, dir) per process and REUSED; what must
-    * stay per-invocation — the checkpoint and the sink — still lives
-    * in a fresh temp base, so every invocation re-executes the full
-    * micro-batch replay from offset zero against identical input
-    * files with identical modification times (FileStreamSource admits
-    * oldest-first, so batch order is reproducible). Trees are deleted
-    * once, at JVM exit.
+  private[graft] def progress(id: String): Seq[Seq[StreamingQueryProgress]] =
+    recorded.getOrDefault(id, Vector.empty)
+
+  /** One streaming run's scratch tree (`base`: checkpoint and file
+    * sinks) and its memory-sink name, unique per run.
     */
-  private[graft] object StagedInputs {
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, Path]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cache.values.forEach(p => Tables.deleteRecursively(p))))
-    /** Cheap content fingerprint of the source tables under `srcDir`
-      * — (relative path, size, mtime) of every regular file, hashed.
-      * Folded into the cache key so an IN-PROCESS regeneration of a
-      * source table invalidates the staged tree instead of silently
-      * replaying stale inputs against a batch oracle computed over the
-      * new data (r13 ADVICE). Listing a testdata dir is a few dozen
-      * stat calls — noise next to the staging write it guards.
+  private final class Run(id: String, val base: Path, val sink: String) {
+    /** Starts `writer` on this run's checkpoint with
+      * `Trigger.AvailableNow`, waits until it has drained every staged
+      * file, records its progress under the query id and stops it.
       */
-    private def fingerprint(srcDir: String): String = {
-      val root = java.nio.file.Paths.get(srcDir)
-      if (!Files.exists(root)) "absent"
-      else {
-        val s = Files.walk(root)
-        try {
-          // nanosecond mtime, not millis: a same-size rewrite landing
-          // within the same millisecond must still change the
-          // fingerprint where the filesystem can tell them apart
-          // (r14 ADVICE; ext4 stores ns timestamps)
-          val items = s.filter(p => Files.isRegularFile(p))
-            .map[String](p => s"${root.relativize(p)}:${Files.size(p)}:" +
-              s"${Files.getLastModifiedTime(p)
-                .to(java.util.concurrent.TimeUnit.NANOSECONDS)}")
-            .sorted().toArray.mkString("\n")
-          java.util.UUID.nameUUIDFromBytes(
-            items.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
-        } finally s.close()
-      }
-    }
-    /** The cached tree for (query, srcDir, content-of-srcDir), built on
-      * first use. A failed build is rolled back and rethrown, never
-      * cached. Entries for SUPERSEDED fingerprints of the same
-      * (query, srcDir) are evicted — and their trees deleted — as soon
-      * as a new fingerprint is requested: an in-process regeneration
-      * loop must not accumulate one orphaned temp tree per rewrite
-      * until JVM exit (r14 ADVICE).
-      */
-    def dir(query: String, srcDir: String)(build: Path => Unit): Path = {
-      val prefix = s"$query|$srcDir|"
-      val key = prefix + fingerprint(srcDir)
-      val it = cache.keySet.iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k != key && k.startsWith(prefix))
-          Option(cache.remove(k)).foreach(Tables.deleteRecursively)
-      }
-      cache.computeIfAbsent(key, _ => {
-        val d = Files.createTempDirectory("graft_staged_")
-        try build(d)
-        catch { case e: Throwable => Tables.deleteRecursively(d); throw e }
-        d
-      })
+    def drain(writer: DataStreamWriter[_]): Unit = {
+      val q = writer
+        .option("checkpointLocation", base.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try {
+        q.awaitTermination()
+        recorded.merge(id, Vector(q.recentProgress.toSeq), _ ++ _)
+      } finally q.stop()
     }
   }
 
-  /** Run-scoped fixed-cost knobs for the bounded streaming replays
+  /** The run scope every query here executes in: `body` gets a fresh
+    * scratch tree for its checkpoint and sinks, and the frame it returns
+    * is detached from that tree ([[Tables.detached]]) before the tree is
+    * deleted, so a long-lived session (or the spec suite's repeated
+    * invocations) accumulates no per-run state — the round-7 leak: four
+    * trees per full verify/bench run, never reclaimed. A memory sink's
+    * view is dropped once the result is detached, so its rows do not
+    * outlive the run either. Staged INPUT trees stay outside the scope:
+    * they are cached for the process lifetime ([[StagedInputs]]).
+    *
+    * The scope also sets run-scoped fixed-cost knobs, with
+    * [[Tables.withConfs]], around the run AND the detaching checkpoint
     * (r13 verdict task 4 → r14 task 3, generalizing commit eb6eb3a
     * from q79/q212 to the whole family). At sf0.1 every replay's wall
     * is FIXED machinery, not data: each micro-batch commits every
     * state-store instance — stores × shuffle partitions — so the
     * session's 32 partitions bill 4× the per-commit constant that 8
-    * would for ~100k-row inputs.
-    * Every harness starts a FRESH checkpoint, so the scoped partition
-    * count is this run's alone (a stateful query's shuffle partitioning
-    * is fixed at its first checkpoint — a real deployment sizes it to
-    * state volume at provisioning time, which is exactly what this is).
-    * Results cannot move: partition count changes WHERE state rows
-    * live, never their values, and every harness ends in a total-order
-    * sort — the driver's hash gates are the proof this holds.
+    * would for ~100k-row inputs. Every run starts a FRESH checkpoint,
+    * so the scoped partition count is this run's alone (a stateful
+    * query's shuffle partitioning is fixed at its first checkpoint — a
+    * real deployment sizes it to state volume at provisioning time,
+    * which is exactly what this is). Results cannot move: partition
+    * count changes WHERE state rows live, never their values, and every
+    * query ends in a total-order sort — the driver's hash gates are the
+    * proof this holds.
     *
     * The scope also selects [[LocalCheckpointFiles]] as the checkpoint
     * file manager. The per-commit constant was never the bytes: without
@@ -164,35 +122,26 @@ object StreamingQueries {
     * paths through `java.nio` and starts none; other schemes keep
     * Spark's manager.
     *
-    * `noData = Some(false)` additionally skips watermark-only no-data
+    * `noDataBatches = false` additionally skips watermark-only no-data
     * micro-batches — ONLY sound when no emitted row depends on
     * watermark-driven eviction or event-time timeout (those fire in
     * the batch AFTER the watermark advances, i.e. precisely in a
     * no-data batch on a bounded replay). Each call site documents its
     * decision: q79/q113 turn them off (in-batch emission), q212/q99/
     * q241/q100 keep them ON (eviction/timeout IS the emit path).
-    *
-    * SERIAL-EXECUTION ASSUMPTION (r14 ADVICE): this mutates the
-    * session-global conf and restores it in a finally — correct for
-    * Verify/Bench/specs, which run queries strictly one at a time, so
-    * no concurrent query can plan under the scoped values. A
-    * concurrently-shared SparkSession would need a dedicated
-    * `spark.newSession()` scope instead.
     */
-  private def withRunConf[T](spark: SparkSession, parts: Int = 8,
-      noData: Option[Boolean] = None)(body: => T): T = {
-    val scoped = Seq(
-      "spark.sql.shuffle.partitions" -> parts.toString,
+  private def withRun(spark: SparkSession, id: String, noDataBatches: Boolean = true)
+                     (body: Run => DataFrame): DataFrame = {
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> "8",
       providerKey -> rocksDbProvider,
       LocalCheckpointFiles.Key -> classOf[LocalCheckpointFiles].getName) ++
-      noData.map("spark.sql.streaming.noDataMicroBatches.enabled" -> _.toString)
-    val set = spark.conf.getAll
-    val prev = scoped.map { case (k, _) => k -> set.get(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+      Option.when(!noDataBatches)("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val sink = s"graft_${id}_sink_${sinkSeq.incrementAndGet()}"
+    recorded.put(id, Vector.empty)
+    try Tables.withConfs(spark, confs: _*) {
+      Tables.detached(s"graft_${id}_run_")(base => body(new Run(id, base, sink)))
+    } finally spark.catalog.dropTempView(sink)
   }
 
   private val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -207,7 +156,7 @@ object StreamingQueries {
     * q194 2.49→2.22 — consistent ~10–18% per query. The r17 tmpfs A/B
     * showed the delta-file bytes cost nothing: the per-commit cost is
     * the per-file shell-outs of Hadoop's local filesystem (see
-    * [[withRunConf]]). Through [[LocalCheckpointFiles]] the HDFS-backed
+    * [[withRun]]). Through [[LocalCheckpointFiles]] the HDFS-backed
     * delta files and RocksDB's checkpoint metadata start none; RocksDB's
     * SST uploads (`FileSystem.copyFromLocalFile`, a `chmod` per file)
     * and its local snapshot deletes (Spark's native `rm -rf`) still do.
@@ -239,36 +188,6 @@ object StreamingQueries {
       if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
     }
 
-  /** Batch counts of the last run, for the specs to pin the
-    * multi-trigger claim (>= number of staged files).
-    */
-  @volatile private[graft] var lastWordFreqBatches: Long = -1
-  @volatile private[graft] var lastSessionBatches: Long = -1
-
-  /** Write `df` as ONE parquet file named `name` inside `inputDir`,
-    * with a controlled modification time — FileStreamSource admits
-    * files oldest-mod-time-first, so ascending `modMs` pins the
-    * micro-batch order. An empty df may legitimately produce no part
-    * file (nothing to stage → one fewer batch, same results).
-    */
-  private def stageOne(df: DataFrame, inputDir: Path,
-                       name: String, modMs: Long): Unit = {
-    val scratch = Files.createTempDirectory("graft_stage_scratch_")
-    try {
-      df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = Files.list(scratch).iterator().asScala
-        .find { p =>
-          val n = p.getFileName.toString
-          n.startsWith("part-") && n.endsWith(".parquet")
-        }
-      part.foreach { p =>
-        val dest = inputDir.resolve(name)
-        Files.copy(p, dest)
-        dest.toFile.setLastModified(modMs)
-      }
-    } finally deleteRecursively(scratch)
-  }
-
   /** q98: the streaming twin of q40 — documents stream → the SAME
     * tokenize+filter stage ([[TextAnalysis.wordsFrom]]) → an
     * incrementally-maintained count per word (complete-mode
@@ -282,39 +201,24 @@ object StreamingQueries {
         .repartitionByRange(4, col("doc_id"))
         .write.parquet(d.resolve("in").toString)
     }.resolve("in").toString
-    val base = Files.createTempDirectory("graft_q98_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3); no
-    // watermark in the plan → no-data batches never fire here, so
+    // no watermark in the plan → no-data batches never fire here, so
     // there is no emission decision to make
-    try withRunConf(spark) {
+    withRun(spark, "q98") { run =>
       val stream = spark.readStream
         .schema(Tables.documentsSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(input)
       val counts = TextAnalysis.wordsFrom(stream)
         .groupBy("word").agg(count(lit(1)).as("freq"))
-      val sink = s"graft_q98_sink_${sinkSeq.incrementAndGet()}"
-      val q = counts.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastWordFreqBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
+      run.drain(counts.writeStream
+        .format("memory").queryName(run.sink)
+        .outputMode("complete"))
       // the memory sink holds the final complete snapshot = counts over
-      // the whole stream (driver-resident — survives the staging delete);
-      // ordering/limit are sink-side, exactly as the batch query's
-      // TakeOrderedAndProject
-      spark.table(sink).orderBy(desc("freq"), asc("word")).limit(k)
-    } finally deleteRecursively(base)
+      // the whole stream; ordering/limit are sink-side, exactly as the
+      // batch query's TakeOrderedAndProject, so only the top k detach
+      spark.table(run.sink).orderBy(desc("freq"), asc("word")).limit(k)
+    }
   }
-
-  /** Micro-batches the last q194 run actually executed (spec pins > 1:
-    * sliding-window counts must ACCUMULATE across triggers).
-    */
-  @volatile private[graft] var lastSlidingBatches: Long = -1
 
   private val slideUs194 = 900000000L       // 15 min
   private val slidesPerWindow194 = 4        // 1 h window = 4 slides
@@ -340,10 +244,9 @@ object StreamingQueries {
         .repartitionByRange(4, col("ts"))
         .write.parquet(d.resolve("in").toString)
     }.resolve("in").toString
-    val base = Files.createTempDirectory("graft_q194_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3); complete-
-    // mode snapshot with no watermark → no-data batches never fire
-    try withRunConf(spark) {
+    // complete-mode snapshot with no watermark → no-data batches never
+    // fire
+    withRun(spark, "q194") { run =>
       val stream = spark.readStream
         .schema(StructType(Seq(StructField("ts", TimestampType))))
         .option("maxFilesPerTrigger", "1")
@@ -355,18 +258,11 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_events"))
         .select(expr("unix_micros(window.start)").as("window_start_us"),
           col("n_events"))
-      val sink = s"graft_q194_sink_${sinkSeq.incrementAndGet()}"
-      val q = counts.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastSlidingBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
-      spark.table(sink).orderBy("window_start_us")
-    } finally deleteRecursively(base)
+      run.drain(counts.writeStream
+        .format("memory").queryName(run.sink)
+        .outputMode("complete"))
+      spark.table(run.sink)
+    }.orderBy("window_start_us")
   }
 
   private val sessionInSchema = StructType(Seq(
@@ -423,48 +319,34 @@ object StreamingQueries {
           .withColumn("event_type", lit("sentinel"))),
         in, "02_sentinel.parquet", now)
     }.resolve("in")
-    val base = Files.createTempDirectory("graft_q99_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3); no-data
-    // batches stay ON — sessions emit on EventTimeTimeout, which fires
-    // in the batch AFTER the sentinel advances the watermark, i.e. in
-    // the trailing no-data batch; turning it off would swallow every
-    // session the sentinel flushes
-    try withRunConf(spark) {
+    // no-data batches stay ON — sessions emit on EventTimeTimeout,
+    // which fires in the batch AFTER the sentinel advances the
+    // watermark, i.e. in the trailing no-data batch; turning it off
+    // would swallow every session the sentinel flushes
+    val sessions = withRun(spark, "q99") { run =>
       val stream = spark.readStream
         .schema(sessionInSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(input.toString)
         .withWatermark("ts", "0 seconds")
         .as[Sessionize.In](org.apache.spark.sql.Encoders.product[Sessionize.In])
-      val outDir = base.resolve("out").toString
-      val q = Sessionize.sessions(stream).writeStream
+      val outDir = run.base.resolve("out").toString
+      run.drain(Sessionize.sessions(stream).writeStream
         .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastSessionBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
-
-      // eager localCheckpoint: the session rows move off the staging
-      // tree (deleted in the finally) into block storage, lineage cut
-      val sessions = spark.read.schema(sessionOutSchema).parquet(outDir)
-        .localCheckpoint(true)
-      val w = Window.partitionBy("user_id").orderBy("session_start")
-      sessions
-        .withColumn("session_id", row_number().over(w).cast("long"))
-        .select(
-          col("user_id"), col("session_id"),
-          col("session_start").as("session_start_us"),
-          col("session_end").as("session_end_us"),
-          col("n_events"),
-          expr("(session_end - session_start) div 1000000").as("duration_sec"))
-        .orderBy("user_id", "session_id")
-    } finally deleteRecursively(base)
+        .option("path", outDir))
+      spark.read.schema(sessionOutSchema).parquet(outDir)
+    }
+    val w = Window.partitionBy("user_id").orderBy("session_start")
+    sessions
+      .withColumn("session_id", row_number().over(w).cast("long"))
+      .select(
+        col("user_id"), col("session_id"),
+        col("session_start").as("session_start_us"),
+        col("session_end").as("session_end_us"),
+        col("n_events"),
+        expr("(session_end - session_start) div 1000000").as("duration_sec"))
+      .orderBy("user_id", "session_id")
   }
-
-  @volatile private[graft] var lastSessionWindowBatches: Long = -1
 
   /** q241: the STREAMING twin of q235 — the same gap sessions through
     * Spark's built-in `session_window` aggregation running inside
@@ -510,12 +392,10 @@ object StreamingQueries {
           lit(maxT + 2 * gapUs).as("tsu"))),
         in, "02_sentinel.parquet", now)
     }.resolve("in")
-    val base = Files.createTempDirectory("graft_q241_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3); no-data
-    // batches stay ON — append-mode session_window rows are emitted by
-    // watermark-driven EVICTION, which runs in the trailing no-data
-    // batch after the sentinel seals the watermark
-    try withRunConf(spark) {
+    // no-data batches stay ON — append-mode session_window rows are
+    // emitted by watermark-driven EVICTION, which runs in the trailing
+    // no-data batch after the sentinel seals the watermark
+    val sessions = withRun(spark, "q241") { run =>
       val inSchema = StructType(Seq(
         StructField("user_id", LongType), StructField("ts", TimestampType)))
       val stream = spark.readStream
@@ -523,8 +403,8 @@ object StreamingQueries {
         .option("maxFilesPerTrigger", "1")
         .parquet(input.toString)
         .withWatermark("ts", "0 seconds")
-      val outDir = base.resolve("out").toString
-      val q = stream
+      val outDir = run.base.resolve("out").toString
+      run.drain(stream
         .groupBy(col("user_id"),
           session_window(col("ts"), s"${gapUs + 1} microseconds"))
         .agg(min(unix_micros(col("ts"))).as("session_start_us"),
@@ -533,14 +413,7 @@ object StreamingQueries {
         .drop("session_window")
         .writeStream
         .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastSessionWindowBatches =
-        Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
+        .option("path", outDir))
 
       val outSchema = StructType(Seq(
         StructField("user_id", LongType),
@@ -548,15 +421,13 @@ object StreamingQueries {
         StructField("session_end_us", LongType),
         StructField("n_events", LongType)))
       spark.read.schema(outSchema).parquet(outDir)
-        .localCheckpoint(true)
-        .filter(col("user_id") >= 0)
-        .withColumn("duration_sec",
-          expr("(session_end_us - session_start_us) div 1000000"))
-        .orderBy("user_id", "session_start_us")
-    } finally deleteRecursively(base)
+    }
+    sessions
+      .filter(col("user_id") >= 0)
+      .withColumn("duration_sec",
+        expr("(session_end_us - session_start_us) div 1000000"))
+      .orderBy("user_id", "session_start_us")
   }
-
-  @volatile private[graft] var lastEnrichBatches: Long = -1
 
   /** q78: stream-STATIC enrichment join — the third canonical streaming
     * shape after stateful aggregation (q98) and keyed-state
@@ -576,10 +447,9 @@ object StreamingQueries {
         .repartitionByRange(4, col("event_id"))
         .write.parquet(d.resolve("in").toString)
     }.resolve("in").toString
-    val base = Files.createTempDirectory("graft_q78_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3); complete-
-    // mode rollup with no watermark → no-data batches never fire
-    try withRunConf(spark) {
+    // complete-mode rollup with no watermark → no-data batches never
+    // fire
+    withRun(spark, "q78") { run =>
       val stream = spark.readStream
         .schema(StructType(Seq(
           StructField("event_id", LongType),
@@ -595,26 +465,23 @@ object StreamingQueries {
           count(lit(1)).as("n_events"),
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("value_sum"))
-      val sink = s"graft_q78_sink_${sinkSeq.incrementAndGet()}"
-      val q = agg.writeStream
-        .format("memory").queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastEnrichBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
-      spark.table(sink).orderBy("c_mktsegment")
-    } finally deleteRecursively(base)
+      run.drain(agg.writeStream
+        .format("memory").queryName(run.sink)
+        .outputMode("complete"))
+      spark.table(run.sink)
+    }.orderBy("c_mktsegment")
   }
-
-  @volatile private[graft] var lastSSJoinBatches: Long = -1
 
   private val ssInSchema = StructType(Seq(
     StructField("event_id", LongType),
     StructField("user_id", LongType),
     StructField("ts", TimestampType)))
+
+  /** The joined rows q79 and q212 land at rest. */
+  private val pairSchema = StructType(Seq(
+    StructField("purchase_id", LongType), StructField("p_user", LongType),
+    StructField("p_ts", TimestampType), StructField("click_id", LongType),
+    StructField("c_user", LongType), StructField("c_ts", TimestampType)))
 
   /** q79: stream-STREAM interval join — the fourth and hardest
     * canonical streaming shape (two unbounded sides, symmetric state,
@@ -649,7 +516,7 @@ object StreamingQueries {
     * batches; the trailing watermark-only batches exist to evict
     * state, which a bounded AvailableNow replay discards at stop
     * anyway (q212's LEFT OUTER twin keeps them ON — outer rows are
-    * emitted by eviction there). Both are restored in finally.
+    * emitted by eviction there). Both are scoped to the run.
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.eventsMicros(spark, dir)
@@ -680,11 +547,10 @@ object StreamingQueries {
       stageSide("click", "clicks")
       stageSide("purchase", "purchases")
     }
-    val base = Files.createTempDirectory("graft_q79_run_")
-    // withRunConf (cost model in the scaladoc above): no-data batches
-    // OFF — the inner join emits in-batch; watermark eviction only
-    // PURGES click state, it never produces a row
-    try withRunConf(spark, noData = Some(false)) {
+    // cost model in the scaladoc above: no-data batches OFF — the
+    // inner join emits in-batch; watermark eviction only PURGES click
+    // state, it never produces a row
+    val pairs = withRun(spark, "q79", noDataBatches = false) { run =>
       def read(dir: String): DataFrame = spark.readStream
         .schema(ssInSchema)
         .option("maxFilesPerTrigger", "1")
@@ -703,41 +569,21 @@ object StreamingQueries {
             AND c_ts >= p_ts - INTERVAL ${graft.ops.TemporalJoins.lookbackSeconds} SECONDS
             AND c_ts < p_ts"""))
 
-      val outDir = base.resolve("out").toString
-      val q = joined.writeStream
+      val outDir = run.base.resolve("out").toString
+      run.drain(joined.writeStream
         .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastSSJoinBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
-
-      // eager localCheckpoint before the finally deletes the sink files
-      val pairs = spark.read.schema(StructType(Seq(
-          StructField("purchase_id", LongType), StructField("p_user", LongType),
-          StructField("p_ts", TimestampType), StructField("click_id", LongType),
-          StructField("c_user", LongType), StructField("c_ts", TimestampType))))
-        .parquet(outDir)
-        .localCheckpoint(true)
-      pairs
-        .select(
-          col("purchase_id"), col("p_user").as("user_id"),
-          expr("unix_micros(p_ts)").as("purchase_tsu"),
-          col("click_id"),
-          expr("unix_micros(c_ts)").as("click_tsu"))
-        .withColumn("gap_us", col("purchase_tsu") - col("click_tsu"))
-        .orderBy("purchase_id", "click_id")
-    } finally deleteRecursively(base)
+        .option("path", outDir))
+      spark.read.schema(pairSchema).parquet(outDir)
+    }
+    pairs
+      .select(
+        col("purchase_id"), col("p_user").as("user_id"),
+        expr("unix_micros(p_ts)").as("purchase_tsu"),
+        col("click_id"),
+        expr("unix_micros(c_ts)").as("click_tsu"))
+      .withColumn("gap_us", col("purchase_tsu") - col("click_tsu"))
+      .orderBy("purchase_id", "click_id")
   }
-
-  /** Late rows actually discarded by the watermark in the last q100 run
-    * (Σ numRowsDroppedByWatermark over the run's micro-batches) — the
-    * spec pins it against the oracle-side count, and >0 proves the run
-    * genuinely exercised the drop path.
-    */
-  @volatile private[graft] var lastLateDropped: Long = -1
 
   /** Tumbling-window width for q100, µs. */
   private val lateWindowUs = 3600L * 1000000L
@@ -813,12 +659,10 @@ object StreamingQueries {
       stageOne(asIn(ev.filter(col("tsu") < mid)),
         in, "02_late_replay.parquet", now - 100000L)
     }.resolve("in")
-    val base = Files.createTempDirectory("graft_q100_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3); no-data
-    // batches stay ON — closed-window emission and the late-drop tally
-    // both ride watermark machinery, and this query's entire PURPOSE is
-    // observing that machinery unperturbed
-    try withRunConf(spark) {
+    // no-data batches stay ON — closed-window emission and the
+    // late-drop tally both ride watermark machinery, and this query's
+    // entire PURPOSE is observing that machinery unperturbed
+    val closed = withRun(spark, "q100") { run =>
       val stream = spark.readStream
         .schema(StructType(Seq(StructField("ts", TimestampType))))
         .option("maxFilesPerTrigger", "1")
@@ -829,33 +673,22 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_events"))
         .select(expr("unix_micros(window.start)").as("window_start_us"),
           col("n_events"))
-      val outDir = base.resolve("out").toString
-      val q = agg.writeStream
+      val outDir = run.base.resolve("out").toString
+      run.drain(agg.writeStream
         .format("parquet")
         .option("path", outDir)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dropped = q.recentProgress.toSeq
-        .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-        .map(_.numRowsDroppedByWatermark).sum
-      lastLateDropped = dropped
-      q.stop()
-
-      val closed = spark.read.schema(outSchema).parquet(outDir)
-        .localCheckpoint(true)
-      closed
-        .unionByName(spark.createDataFrame(
-          java.util.List.of(Row(-1L, dropped)), outSchema))
-        .orderBy("window_start_us")
-    } finally deleteRecursively(base)
+        .outputMode("append"))
+      spark.read.schema(outSchema).parquet(outDir)
+    }
+    // late rows the watermark discarded, Σ over the run's micro-batches
+    val dropped = progress("q100").flatten
+      .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+      .map(_.numRowsDroppedByWatermark).sum
+    closed
+      .unionByName(spark.createDataFrame(
+        java.util.List.of(Row(-1L, dropped)), outSchema))
+      .orderBy("window_start_us")
   }
-
-  @volatile private[graft] var lastDedupBatches: Long = -1
-  @volatile private[graft] var lastDedupStagedRows: Long = -1
-  @volatile private[graft] var lastDedupEmittedRows: Long = -1
 
   /** q113: streaming EXACTLY-ONCE DEDUP over at-least-once delivery —
     * the ingestion-boundary operator every replayed/redelivered
@@ -928,41 +761,26 @@ object StreamingQueries {
       }
       stageOne(slice(2), in, "03_c.parquet", now - 100000L)
     }.resolve("in")
-    val base = Files.createTempDirectory("graft_q113_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3); no-data
-    // batches OFF — dropDuplicatesWithinWatermark emits novel rows in
-    // the SAME micro-batch they arrive (the watermark only bounds state
-    // retention, and the delay is sized so nothing evicts), so the
-    // trailing watermark-only batches commit state for zero new rows
-    try withRunConf(spark, noData = Some(false)) {
+    // no-data batches OFF — dropDuplicatesWithinWatermark emits novel
+    // rows in the SAME micro-batch they arrive (the watermark only
+    // bounds state retention, and the delay is sized so nothing
+    // evicts), so the trailing watermark-only batches commit state for
+    // zero new rows
+    rollup(withRun(spark, "q113", noDataBatches = false) { run =>
       val deduped = spark.readStream
         .schema(inSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(input.toString)
         .withWatermark("ts", s"$delaySec seconds")
         .dropDuplicatesWithinWatermark("event_id")
-      val outDir = base.resolve("out").toString
-      val q = deduped.writeStream
+      val outDir = run.base.resolve("out").toString
+      run.drain(deduped.writeStream
         .format("parquet")
         .option("path", outDir)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastDedupBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
-
-      val emitted = spark.read.schema(inSchema).parquet(outDir)
-        .localCheckpoint(true)
-      lastDedupEmittedRows = emitted.count()
-      lastDedupStagedRows = ev.count() + slice(1).count()
-      rollup(emitted)
-    } finally deleteRecursively(base)
+        .outputMode("append"))
+      spark.read.schema(inSchema).parquet(outDir)
+    })
   }
-
-  @volatile private[graft] var lastResumeFirstBatches: Long = -1
-  @volatile private[graft] var lastResumeSecondBatches: Long = -1
 
   /** q128: CHECKPOINT RESTART/RESUME — the recovery semantics class
     * q98-q113 leave untested as observed behavior: a streaming job that
@@ -1010,15 +828,12 @@ object StreamingQueries {
       for (i <- 0 to 3)
         stageOne(slice(i), files, f"0$i.parquet", now - (4 - i) * 100000L)
     }.resolve("files")
-    val base = Files.createTempDirectory("graft_q128_run_")
-    // withRunConf: parts=8 (BOTH runs share the one fresh checkpoint
-    // inside this scope, so the partition count is consistent across
-    // the restart, r14 task 3); stateless transform, no watermark →
-    // no-data batches never fire
-    try withRunConf(spark) {
-      val input = Files.createDirectory(base.resolve("in"))
-      val outDir = base.resolve("out").toString
-      val ckpt = base.resolve("ckpt").toString
+    // BOTH runs share the one fresh checkpoint inside this scope, so the
+    // partition count is consistent across the restart; stateless
+    // transform, no watermark → no-data batches never fire
+    withRun(spark, "q128") { run =>
+      val input = Files.createDirectory(run.base.resolve("in"))
+      val outDir = run.base.resolve("out").toString
       def arrive(name: String): Unit = {
         val src = prepared.resolve(name)
         if (Files.exists(src)) {
@@ -1027,36 +842,27 @@ object StreamingQueries {
           dest.toFile.setLastModified(src.toFile.lastModified())
         }
       }
-      def run(): Long = {
-        val q = spark.readStream
-          .schema(inSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(input.toString)
-          .filter(col("value").isNotNull)
-          .writeStream
-          .format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
-        q.stop()
-        batches
-      }
+      def drainInput(): Unit = run.drain(spark.readStream
+        .schema(inSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(input.toString)
+        .filter(col("value").isNotNull)
+        .writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .outputMode("append"))
       arrive("00.parquet")
       arrive("01.parquet")
-      lastResumeFirstBatches = run()
+      drainInput()
       // the job is DOWN; new data lands; the restart must skip 00/01
       arrive("02.parquet")
       arrive("03.parquet")
-      lastResumeSecondBatches = run()
+      drainInput()
 
-      // materialize before the sink tree is deleted — the rollup (one
-      // row per event type), not the raw sink rows (9.5 MB at sf0.1)
-      rollup(spark.read.schema(inSchema).parquet(outDir)).localCheckpoint(true)
-    } finally deleteRecursively(base)
+      // detach the rollup (one row per event type), not the raw sink
+      // rows (9.5 MB at sf0.1)
+      rollup(spark.read.schema(inSchema).parquet(outDir))
+    }
   }
 
   /** q212: stream-stream LEFT OUTER interval join — the semantics q79
@@ -1129,11 +935,10 @@ object StreamingQueries {
       stageSide("click", "clicks")
       stageSide("purchase", "purchases")
     }
-    val base = Files.createTempDirectory("graft_q212_run_")
-    // withRunConf (q79's cost model); no-data micro-batches stay ON —
-    // the outer rows are emitted by watermark-driven eviction, which
-    // runs in the trailing no-data batch
-    try withRunConf(spark) {
+    // q79's cost model; no-data micro-batches stay ON — the outer rows
+    // are emitted by watermark-driven eviction, which runs in the
+    // trailing no-data batch
+    val pairs = withRun(spark, "q212") { run =>
       def read(dir: String): DataFrame = spark.readStream
         .schema(ssInSchema)
         .option("maxFilesPerTrigger", "1")
@@ -1152,39 +957,26 @@ object StreamingQueries {
             AND c_ts >= p_ts - INTERVAL ${graft.ops.TemporalJoins.lookbackSeconds} SECONDS
             AND c_ts < p_ts"""), "leftOuter")
 
-      val outDir = base.resolve("out").toString
-      val q = joined.writeStream
+      val outDir = run.base.resolve("out").toString
+      run.drain(joined.writeStream
         .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-
-      val pairs = spark.read.schema(StructType(Seq(
-          StructField("purchase_id", LongType), StructField("p_user", LongType),
-          StructField("p_ts", TimestampType), StructField("click_id", LongType),
-          StructField("c_user", LongType), StructField("c_ts", TimestampType))))
-        .parquet(outDir)
-        .localCheckpoint(true)
-      pairs
-        .filter(col("purchase_id") >= 0)
-        .select(
-          col("purchase_id"), col("p_user").as("user_id"),
-          expr("unix_micros(p_ts)").as("purchase_tsu"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"),
-          coalesce(expr("unix_micros(c_ts)"), lit(-1L)).as("click_tsu"))
-        .withColumn("gap_us",
-          when(col("click_id") >= 0,
-            col("purchase_tsu") - col("click_tsu")).otherwise(lit(-1L)))
-        .orderBy("purchase_id", "click_id")
-    } finally deleteRecursively(base)
+        .option("path", outDir))
+      spark.read.schema(pairSchema).parquet(outDir)
+    }
+    pairs
+      .filter(col("purchase_id") >= 0)
+      .select(
+        col("purchase_id"), col("p_user").as("user_id"),
+        expr("unix_micros(p_ts)").as("purchase_tsu"),
+        coalesce(col("click_id"), lit(-1L)).as("click_id"),
+        coalesce(expr("unix_micros(c_ts)"), lit(-1L)).as("click_tsu"))
+      .withColumn("gap_us",
+        when(col("click_id") >= 0,
+          col("purchase_tsu") - col("click_tsu")).otherwise(lit(-1L)))
+      .orderBy("purchase_id", "click_id")
   }
 
   type Q = (SparkSession, String) => DataFrame
-
-  @volatile private[graft] var lastLshBatches: Long = -1
 
   /** One doc in one LSH bucket (streaming relation row). */
   private[graft] case class LshIn(bucket: String, band: Int,
@@ -1255,12 +1047,11 @@ object StreamingQueries {
         stageOne(docs.filter(pmod(col("doc_id"), lit(3)) === i),
           in, f"0${i}_slice.parquet", now - (3 - i) * 100000L)
     }.resolve("in")
-    val base = Files.createTempDirectory("graft_q285_run_")
-    // withRunConf: parts=8 (fresh checkpoint, r14 task 3 — this was
-    // the record's single most expensive query at 5.2 s, almost all of
-    // it per-batch keyed-state commit fan-out); no watermark in the
-    // plan (NoTimeout keyed state) → no-data batches never fire
-    try withRunConf(spark) {
+    // the run's 8 shuffle partitions matter most here: this was the
+    // record's single most expensive query at 5.2 s, almost all of it
+    // per-batch keyed-state commit fan-out; no watermark in the plan
+    // (NoTimeout keyed state) → no-data batches never fire
+    withRun(spark, "q285") { run =>
       val banded = spark.readStream.schema(inSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(input.toString)
@@ -1323,25 +1114,17 @@ object StreamingQueries {
             out.result().iterator
         }
 
-      val outDir = base.resolve("out").toString
-      val q = pairs.toDF("doc_a", "doc_b", "est_jaccard").writeStream
+      val outDir = run.base.resolve("out").toString
+      run.drain(pairs.toDF("doc_a", "doc_b", "est_jaccard").writeStream
         .format("parquet")
         .option("path", outDir)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastLshBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L)
-      q.stop()
+        .outputMode("append"))
       spark.read
         .schema(StructType(Seq(
           StructField("doc_a", LongType), StructField("doc_b", LongType),
           StructField("est_jaccard", DoubleType))))
         .parquet(outDir)
-        .localCheckpoint(true)
-        .orderBy("doc_a", "doc_b")
-    } finally deleteRecursively(base)
+    }.orderBy("doc_a", "doc_b")
   }
 
   val queries: Map[String, Q] = Map(

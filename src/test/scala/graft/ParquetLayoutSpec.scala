@@ -194,17 +194,24 @@ class ParquetLayoutSpec extends AnyFunSuite with SparkTestBase {
 
   test("q103 leaves no scratch layout behind") {
     import scala.jdk.CollectionConverters._
-    def scratch(): Set[String] = {
+    def scratch(prefix: String): Set[String] = {
       val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
       val s = java.nio.file.Files.list(tmp)
       try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("graft_q103_")).toSet
+        .filter(_.startsWith(prefix)).toSet
       finally s.close()
     }
-    val before = scratch()
-    val rows = ParquetLayout.partitionPrunedRevenue(spark, sf).count()
-    assert(rows > 0)
-    assert((scratch() -- before).isEmpty)
+    // q128's run tree goes through the same detaching scope
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "graft_q103_" -> (() => ParquetLayout.partitionPrunedRevenue(spark, sf)),
+      "graft_q128_run_" ->
+        (() => graft.streaming.StreamingQueries.streamingRestartResume(spark, sf))
+    ).foreach { case (prefix, query) =>
+      val before = scratch(prefix)
+      val rows = query().count()
+      assert(rows > 0, prefix)
+      assert((scratch(prefix) -- before).isEmpty, prefix)
+    }
   }
   test("q165: z-order keeps row-group stats selective on BOTH probe dimensions") {
     withTempDir("graft_q165spec_") { base =>

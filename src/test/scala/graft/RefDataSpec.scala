@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference-input declarations that the whole-surface specs
   * (PlanGuardSpec, SparkEntrySpec, OracleTypeSpec) trust to leave out
   * only what the unmounted corpus makes unrunnable, and a sweep that
-  * keeps every refdata path relative to the checkout the engine runs in.
+  * keeps every refdata path relative to the checkout the engine runs in,
+  * and every tools script pointed at the checkout it sits in.
   */
 class RefDataSpec extends AnyFunSuite with SparkTestBase {
 
@@ -72,6 +73,19 @@ class RefDataSpec extends AnyFunSuite with SparkTestBase {
       text.contains(checkout) || refdataLiteral.findFirstIn(text).nonEmpty
     }
     assert(offenders.isEmpty, s"use RefData.path instead:\n${offenders.mkString("\n")}")
+    // the tools' shell scripts find the checkout from their own directory
+    val tools = Files.list(Paths.get("tools"))
+    val scripts = try tools.iterator.asScala.filter(_.toString.endsWith(".sh")).toList
+      finally tools.close()
+    assert(scripts.nonEmpty, "no tools/*.sh found")
+    val checkoutDir = Paths.get("").toAbsolutePath.toString + "/"
+    val absoluteBuildDir = "(^|[\\s\"'=:])/[^\\s\"':$]*/target/".r
+    val scriptOffenders = scripts.filter { p =>
+      val text = Files.readString(p)
+      text.contains(checkoutDir) || absoluteBuildDir.findFirstIn(text).nonEmpty
+    }
+    assert(scriptOffenders.isEmpty,
+      s"resolve the checkout from the script's directory:\n${scriptOffenders.mkString("\n")}")
     val here = Paths.get("refdata").toAbsolutePath.toString
     Seq(graft.ops.TagMining.animeCsvPath, graft.sources.BinaryIngest.segmentsGlob)
       .foreach(p => assert(p.startsWith(here) && RefData.present(p), p))

@@ -263,7 +263,7 @@ class RelationalSpec extends AnyFunSuite with SparkTestBase {
 
   test("q175: InjectRuntimeFilter plants a bloom might_contain under the " +
     "scoped confs — and only then — without changing the result") {
-    val (onPlan, onRows) = Relational.withRuntimeBloomConfs(spark) {
+    val (onPlan, onRows) = Tables.withConfs(spark, Relational.runtimeBloomConfs: _*) {
       val df = Relational.runtimeBloomJoined(spark, sf)
       (df.queryExecution.optimizedPlan.toString, df.collect().toSeq)
     }

@@ -14,12 +14,30 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  /** Micro-batches of each run the latest invocation of `id` drained:
+    * one past the last progress's batch id (ids continue across a
+    * restart on the same checkpoint).
+    */
+  private def batches(id: String): Seq[Long] =
+    StreamingQueries.progress(id).map(_.lastOption.fold(0L)(_.batchId + 1))
+
+  private def singleRunBatches(id: String): Long = {
+    val Seq(n) = batches(id)
+    n
+  }
+
+  /** Memory-sink views left in the session catalog. */
+  private def sinkViews(): Seq[String] =
+    spark.catalog.listTables().collect().toSeq.map(_.name)
+      .filter(_.matches("graft_q\\d+_sink_.*"))
+
   test("q98: streaming word-freq == batch q40 over the same documents, multi-batch") {
     val streamed = rows(StreamingQueries.streamingWordFreq(spark, sf))
     val batch = rows(TextAnalysis.wordFreqTopK(spark, sf))
     assert(streamed == batch)
-    assert(StreamingQueries.lastWordFreqBatches >= 2,
-      s"expected >=2 micro-batches, got ${StreamingQueries.lastWordFreqBatches}")
+    assert(singleRunBatches("q98") >= 2,
+      s"expected >=2 micro-batches, got ${batches("q98")}")
+    assert(sinkViews().isEmpty, s"memory-sink views left: ${sinkViews()}")
   }
 
   test("q285: streaming LSH near-dup == batch q54 candidates exactly, " +
@@ -30,8 +48,8 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
       .lshCandidatesCore(graft.Tables.documents(spark, sf), 0.5))
     assert(streamed == batch,
       s"streaming ${streamed.size} pairs vs batch ${batch.size}")
-    assert(StreamingQueries.lastLshBatches >= 3,
-      s"expected >=3 micro-batches, got ${StreamingQueries.lastLshBatches}")
+    assert(singleRunBatches("q285") >= 3,
+      s"expected >=3 micro-batches, got ${batches("q285")}")
     // the id-mod staging puts most pairs in different micro-batches —
     // at least one emitted pair must have crossed trigger state
     if (streamed.nonEmpty) {
@@ -92,8 +110,9 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
       .agg(count(lit(1)).as("n_events"))
       .orderBy("window_start_us"))
     assert(streamed == batch)
-    assert(StreamingQueries.lastSlidingBatches >= 2,
-      s"expected >=2 micro-batches, got ${StreamingQueries.lastSlidingBatches}")
+    assert(singleRunBatches("q194") >= 2,
+      s"expected >=2 micro-batches, got ${batches("q194")}")
+    assert(sinkViews().isEmpty, s"memory-sink views left: ${sinkViews()}")
   }
 
   test("q78: stream-static enrichment join == batch join+agg, multi-batch") {
@@ -108,8 +127,9 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
           .as("value_sum"))
       .orderBy("c_mktsegment"))
     assert(streamed == batch)
-    assert(StreamingQueries.lastEnrichBatches >= 2,
-      s"expected >=2 micro-batches, got ${StreamingQueries.lastEnrichBatches}")
+    assert(singleRunBatches("q78") >= 2,
+      s"expected >=2 micro-batches, got ${batches("q78")}")
+    assert(sinkViews().isEmpty, s"memory-sink views left: ${sinkViews()}")
   }
 
   test("q113: streaming dedup == batch rollup despite a redelivered batch") {
@@ -123,11 +143,14 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
           .as("value_sum"))
       .orderBy("event_type"))
     assert(streamed == batch)
-    assert(StreamingQueries.lastDedupBatches >= 4,
-      s"expected >=4 micro-batches, got ${StreamingQueries.lastDedupBatches}")
-    // the staging genuinely carried duplicates, and none survived
-    assert(StreamingQueries.lastDedupStagedRows > StreamingQueries.lastDedupEmittedRows)
-    assert(StreamingQueries.lastDedupEmittedRows ==
+    assert(singleRunBatches("q113") >= 4,
+      s"expected >=4 micro-batches, got ${batches("q113")}")
+    // the staging genuinely carried duplicates, and none survived: the
+    // run read more rows than the result counts
+    val staged = StreamingQueries.progress("q113").flatten.map(_.numInputRows).sum
+    val emitted = streamed.map(_(1).asInstanceOf[Long]).sum
+    assert(staged > emitted, s"read $staged rows, emitted $emitted")
+    assert(emitted ==
       Tables.events(spark, sf).filter(col("ts").isNotNull).count())
   }
 
@@ -145,11 +168,9 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
     // run 1 drained its 2 staged files; run 2's batch ids CONTINUE from
     // the checkpoint (2 more batches, numbered after run 1's) — a fresh
     // restart would renumber from 0, a reprocess would double counts
-    assert(StreamingQueries.lastResumeFirstBatches == 2,
-      s"run 1 batches: ${StreamingQueries.lastResumeFirstBatches}")
-    assert(StreamingQueries.lastResumeSecondBatches ==
-      StreamingQueries.lastResumeFirstBatches + 2,
-      s"run 2 final batch count: ${StreamingQueries.lastResumeSecondBatches}")
+    val Seq(first, second) = batches("q128")
+    assert(first == 2, s"run 1 batches: $first")
+    assert(second == first + 2, s"run 2 final batch count: $second")
   }
 
   test("q113 horizon contract: a duplicate past the watermark delay is re-admitted") {
@@ -207,8 +228,8 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
         (col("purchase_tsu") - col("click_tsu")).as("gap_us"))
       .orderBy("purchase_id", "click_id"))
     assert(streamed.nonEmpty && streamed == batch)
-    assert(StreamingQueries.lastSSJoinBatches >= 2,
-      s"expected >=2 micro-batches, got ${StreamingQueries.lastSSJoinBatches}")
+    assert(singleRunBatches("q79") >= 2,
+      s"expected >=2 micro-batches, got ${batches("q79")}")
   }
 
   test("q212: stream-stream LEFT OUTER join == batch left join — " +
@@ -247,8 +268,8 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed.size == batch.size)
     assert(streamed == batch)
     // 2 time-split files + 1 sentinel file, one per trigger
-    assert(StreamingQueries.lastSessionBatches >= 3,
-      s"expected >=3 micro-batches, got ${StreamingQueries.lastSessionBatches}")
+    assert(singleRunBatches("q99") >= 3,
+      s"expected >=3 micro-batches, got ${batches("q99")}")
   }
 
   test("q241: streaming session_window == batch q235, multi-batch, " +
@@ -258,8 +279,8 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed.size == batch.size)
     assert(streamed == batch)
     // 2 time-split files + 1 watermark-pusher sentinel, one per trigger
-    assert(StreamingQueries.lastSessionWindowBatches >= 3,
-      s"expected >=3 micro-batches, got ${StreamingQueries.lastSessionWindowBatches}")
+    assert(singleRunBatches("q241") >= 3,
+      s"expected >=3 micro-batches, got ${batches("q241")}")
   }
 
   test("q100: late rows are dropped behind the watermark and accounted") {
@@ -289,8 +310,10 @@ class StreamingQueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(got == want)
     // the run must have genuinely exercised the drop path, and the
     // engine-observed drop count must equal the recomputed one
-    assert(StreamingQueries.lastLateDropped == droppedWant)
-    assert(StreamingQueries.lastLateDropped > 0,
+    val dropped = StreamingQueries.progress("q100").flatten
+      .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    assert(dropped == droppedWant)
+    assert(dropped > 0,
       "fixture produced no late drops — the semantics class went untested")
   }
 
