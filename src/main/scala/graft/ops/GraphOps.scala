@@ -2,117 +2,78 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.{RefData, Tables}
 
-/** Graph analytics over the co-occurrence graph — PageRank and
-  * connected components via GraphX. The reference README claims these
-  * (README.md:17, relation_graph/readme.md:18-19) but ships only the
-  * co-occurrence counts (SURVEY.md §0.1); here the claim is made real,
-  * clearly labeled as an extension.
+/** Graph analytics over the co-occurrence graph. The reference README
+  * claims PageRank and community detection (README.md:17,
+  * relation_graph/readme.md:18-19) but ships only the co-occurrence
+  * counts (SURVEY.md §0.1); here the claims are made real, clearly
+  * labeled as an extension.
   *
-  * GraphX is RDD-based by design (Pregel iteration has no DataFrame
-  * twin); the DataFrame boundary is kept tight: edges in, scored
-  * DataFrame out, vertex ids are stable hashes of entity names.
-  *
-  * Storage discipline: the edge DataFrame is cached only while the
-  * iteration runs; results are localCheckpoint-materialized (lineage
-  * cut) so every upstream cache — ours and GraphX's internal ones — is
-  * unpersisted before returning. Repeated invocations in a long-lived
-  * session hold no storage.
+  * Two execution shapes. The aggregated co-occurrence and relation
+  * graphs are lexicon-bounded (|V| ≤ lexicon size whatever the corpus
+  * volume), so every fixpoint over them — PageRank, components, label
+  * propagation, BFS, paths, k-core, Louvain — runs as a plain-Scala
+  * kernel in one executor task through [[inOneTask]]: edges in, rows
+  * out, one node of the caller's plan, nothing cached. Only the
+  * upstream edge aggregation scales with the data, and it stays
+  * distributed. The DataFrame rounds that remain are the HITS loops
+  * over the purchase graph, which grows with the data, and q118's
+  * peel and q209/q215's star rounds, the distributed twins that
+  * `GraphScaleBench` times on million-edge graphs.
   */
 object GraphOps {
 
   val pageRankIters = 10
   val resetProb = 0.15
 
-  private def edgeGraph(spark: SparkSession, dir: String): (Graph[Int, Long], DataFrame) = {
-    // edgeCounts, not edges: the presentation sort is useless here and
-    // would bake a global-sort exchange into the cached plan
-    val e = CooccurrenceGraph.edgeCounts(spark, dir)
-      .withColumn("src_id", xxhash64(col("src")))
-      .withColumn("dst_id", xxhash64(col("dst")))
-      .cache()
-    // The AGGREGATED graph is bounded by the entity lexicon (|V| ≤
-    // lexicon size, |E| ≤ |V|²) no matter how large the corpus — only
-    // the edge-weight aggregation above scales with data volume. Running
-    // Pregel's 20 iterations over 32 near-empty partitions is pure
-    // scheduling overhead (measured 22 s → ~2 s at sf0.1), so the tiny
-    // edge set is collapsed before iteration.
-    val edges = e.select("src_id", "dst_id", "weight").rdd.map(r =>
-      Edge(r.getLong(0), r.getLong(1), r.getLong(2))).coalesce(2)
-    (Graph.fromEdges(edges, defaultValue = 0), e)
-  }
-
-  private def names(e: DataFrame): DataFrame =
-    e.select(col("src").as("entity_id"), col("src_id").as("vid"))
-      .union(e.select(col("dst"), col("dst_id")))
-      .distinct()
-
-  /** Materialize `out`, then drop every upstream cache: the caller gets
-    * a lineage-free DataFrame whose blocks the ContextCleaner reclaims
-    * on GC — no unbounded storage accumulation across invocations
-    * (round-2 advice: edgeGraph cached and never unpersisted).
-    */
-  private def materializeAndRelease(out: DataFrame, e: DataFrame,
-                                    graphs: Graph[_, _]*): DataFrame = {
-    val done = out.localCheckpoint(true)
-    graphs.foreach(_.unpersist(blocking = false))
-    e.unpersist(blocking = false)
-    done
-  }
-
   /** WEIGHTED PageRank over the undirected (symmetrized) co-occurrence
     * graph: transition probability proportional to edge weight
     * (rank flows along heavy co-occurrence edges), the natural reading
-    * of the reference readme's "relation strength" aspiration.
-    * GraphX's staticPageRank is degree-normalized and ignores edge
-    * attrs, so the power iteration is spelled out: normalize each edge
+    * of the reference readme's "relation strength" aspiration. The
+    * power iteration is spelled out (a library PageRank is
+    * degree-normalized and ignores edge weights): normalize each edge
     * by its source's total out-weight, then iterate
     * rank = reset + (1-reset)·Σ incoming. Symmetrization leaves no
     * dangling vertices, so Σ rank = |V| is preserved exactly
     * (GraphOpsSpec pins it). Fixed iteration count → deterministic.
     */
   def pagerank(spark: SparkSession, dir: String): DataFrame =
-    pagerankRanks(spark, dir)
+    pagerankCore(CooccurrenceGraph.edgeCounts(spark, dir))
+
+  /** Core over any (src, dst, weight) edge frame — fixture seam. */
+  private[graft] def pagerankCore(edges: DataFrame): DataFrame =
+    pagerankRanks(edges)
       .select(col("entity_id"), round(col("rank"), 6).as("pagerank"))
-      .orderBy(desc("pagerank"), asc("entity_id"))
+      .sortWithinPartitions(desc("pagerank"), asc("entity_id"))
 
   /** Unrounded ranks — the GraphOpsSpec seam: the value pin against an
     * independent plain-Scala power iteration compares at 1e-9, which
     * the 6dp presentation rounding above would mask.
     */
-  private[graft] def pagerankRanks(spark: SparkSession, dir: String): DataFrame = {
-    val (g0, e) = edgeGraph(spark, dir)
-    val sym = Graph.fromEdges(
-      g0.edges.union(g0.edges.map(ed => Edge(ed.dstId, ed.srcId, ed.attr))),
-      defaultValue = 0).cache()
-    val outWeight = sym.aggregateMessages[Double](
-      t => t.sendToSrc(t.attr.toDouble), _ + _)
-    val norm = sym.outerJoinVertices(outWeight)((_, _, w) => w.getOrElse(0.0))
-      .mapTriplets(t => t.attr.toDouble / t.srcAttr)
-    var ranks: Graph[Double, Double] = norm.mapVertices((_, _) => 1.0).cache()
-    for (_ <- 1 to pageRankIters) {
-      val msgs = ranks.aggregateMessages[Double](
-        t => t.sendToDst(t.srcAttr * t.attr), _ + _)
-      val prev = ranks
-      ranks = ranks.outerJoinVertices(msgs)((_, _, m) =>
-        resetProb + (1 - resetProb) * m.getOrElse(0.0)).cache()
-      ranks.vertices.count() // materialize before dropping the parent
-      prev.unpersist(blocking = false)
+  private[graft] def pagerankRanks(spark: SparkSession, dir: String): DataFrame =
+    pagerankRanks(CooccurrenceGraph.edgeCounts(spark, dir))
+
+  /** One [[inOneTask]] kernel in doubles over the edges symmetrized
+    * with duplicates kept: each edge carries rank(a)·(w / outW(a)).
+    */
+  private[graft] def pagerankRanks(edges: DataFrame): DataFrame =
+    inOneTask(edges, vertexSchema(edges, "rank", DoubleType, nullable = false)) { es =>
+      val sym = symmetric(es)
+      val outW = sym.groupMapReduce(_._1)(_._3.toDouble)(_ + _)
+      var rank = outW.map { case (v, _) => v -> 1.0 }
+      for (_ <- 1 to pageRankIters) {
+        val inflow = sym.groupMapReduce(_._2) { case (a, _, w) => rank(a) * (w / outW(a)) }(_ + _)
+        rank = rank.map { case (v, _) =>
+          v -> (resetProb + (1 - resetProb) * inflow.getOrElse(v, 0.0)) }
+      }
+      rank.iterator.map { case (v, r) => Row(v, r) }
     }
-    val s = spark
-    import s.implicits._
-    val rankDf = ranks.vertices.toDF("vid", "rank")
-    val out = names(e).join(rankDf, "vid")
-      .select(col("entity_id"), col("rank"))
-    materializeAndRelease(out, e, g0, sym, norm, ranks)
-  }
 
   /** q328 fixed-point scale: one vertex's initial rank mass in
     * micro-micro units (10¹²), and the iteration count shared with
@@ -140,10 +101,10 @@ object GraphOps {
     *   - symmetrization leaves no dangling mass, so Σ R stays within
     *     truncation dust of n·10¹² (spec-pinned bounds).
     *
-    * q33 (float, GraphX) stays registered as the ml-lib twin — this is
-    * the q327-for-q65 move on the ITERATIVE-FIXPOINT no-oracle class:
-    * fixed rounds + exact arithmetic = rows+schema+hash gate, damping
-    * and all. Fulfills relation_graph/readme.md:18-19's PageRank
+    * q33 (float, the same kernel shape in doubles) stays registered as
+    * the rows-only twin — this is the q327-for-q65 move on the
+    * ITERATIVE-FIXPOINT no-oracle class: fixed rounds + exact
+    * arithmetic = rows+schema+hash gate, damping and all. Fulfills relation_graph/readme.md:18-19's PageRank
     * aspiration (SURVEY §0.1) with a fully verifiable ranking.
     *
     * Scale: like q33 the iteration runs on the lexicon-bounded
@@ -183,8 +144,9 @@ object GraphOps {
     * synchronous rounds — with NOTHING float anywhere (weights are
     * counts, the argmax a (sum DESC, label ASC) rank), so the whole
     * fixpoint replays in DuckDB as one chained CTE round per
-    * iteration. q35 (GraphX Pregel) stays registered as the twin;
-    * output here is per-vertex (entity_id, community = adopted label)
+    * iteration. q35 and q75 run these same rounds ([[lpaLabels]]) over
+    * the fanren relation graph and emit member lists; output here is
+    * per-vertex (entity_id, community = adopted label)
     * — the assignment grain, hash-gated.
     *
     * Scale: q328's argument — one [[inOneTask]] kernel over the
@@ -196,16 +158,24 @@ object GraphOps {
   /** Core over any (src, dst, weight) edge frame — fixture seam. */
   private[graft] def lpaExactCore(edges: DataFrame): DataFrame =
     inOneTask(edges, vertexSchema(edges, "community", StringType, nullable = true)) { es =>
-      val sym = symmetric(es)
-      var lbl = sym.map(t => t._1 -> t._1).toMap
-      for (_ <- 1 to lpaIters) {
-        lbl = sym.groupMapReduce { case (a, b, _) => (b, lbl(a)) }(_._3)(Math.addExact)
-          .groupBy(_._1._1).map { case (v, sums) =>
-            // (Σ weight desc, label asc) — Spark's string order is UTF-8 bytes
-            v -> sums.minBy { case ((_, l), w) => (-w, UTF8String.fromString(l)) }._1._2 }
-      }
-      lbl.iterator.map { case (v, l) => Row(v, l) }
+      lpaLabels(es).iterator.map { case (v, l) => Row(v, l) }
     }.sortWithinPartitions("entity_id")
+
+  /** The label rounds q329, q35 and q75 share: each vertex's label after
+    * [[lpaIters]] synchronous rounds over `es` symmetrized with
+    * duplicates kept, starting from its own name.
+    */
+  private def lpaLabels(es: Seq[(String, String, Long)]): Map[String, String] = {
+    val sym = symmetric(es)
+    var lbl = sym.map(t => t._1 -> t._1).toMap
+    for (_ <- 1 to lpaIters) {
+      lbl = sym.groupMapReduce { case (a, b, _) => (b, lbl(a)) }(_._3)(Math.addExact)
+        .groupBy(_._1._1).map { case (v, sums) =>
+          // (Σ weight desc, label asc) — Spark's string order is UTF-8 bytes
+          v -> sums.minBy { case ((_, l), w) => (-w, UTF8String.fromString(l)) }._1._2 }
+    }
+    lbl
+  }
 
   /** q337 — MODULARITY OF THE EXACT-LPA PARTITION, fully oracle-gated
     * (r16 verdict task 2: the cheapest remaining no-oracle conversion):
@@ -217,10 +187,11 @@ object GraphOps {
     * whole composition replays in DuckDB as the q329 CTE chain plus
     * the q74 modularity tail (membership MATERIALIZED — the chain is
     * referenced three times downstream, and DuckDB 1.0 inlines
-    * non-materialized CTEs per reference). q75 stays registered for
-    * the GraphX-LPA production path; the partition here is grouped by
+    * non-materialized CTEs per reference). q75 runs the same rounds
+    * over the fanren relation graph; the partition here is grouped by
     * the ADOPTED LABEL (q329's grain) — the same partition, without
-    * the member-list rep rename.
+    * the member-list rep rename. q74 has the same shape over
+    * [[components]].
     *
     * Scale: q329's lexicon-bounded iteration + q74's three hash aggs
     * and one broadcast single-row 2m — nothing new.
@@ -430,21 +401,20 @@ object GraphOps {
     topA.unionByName(topH).orderBy(col("role"), desc("score"), col("node_id"))
   }
 
-  /** Connected components — entity clusters that ever co-occur. */
-  def connectedComponents(spark: SparkSession, dir: String): DataFrame = {
-    val (g, e) = edgeGraph(spark, dir)
-    val cc = g.connectedComponents()
-    val s = spark
-    import s.implicits._
-    val ccDf = cc.vertices.toDF("vid", "component")
-    val out = names(e).join(ccDf, "vid")
-      .groupBy("component")
-      .agg(sort_array(collect_list("entity_id")).as("members"),
-        count(lit(1)).as("n_members"))
-      .select(col("members")(0).as("component_rep"), col("members"), col("n_members"))
-      .orderBy(desc("n_members"), asc("component_rep"))
-    materializeAndRelease(out, e, g, cc)
-  }
+  /** q34 — connected components: entity clusters that ever co-occur,
+    * one row per component (component_rep = its smallest member, the
+    * sorted members, n_members), largest first. The label-free output
+    * is what lets the q34 oracle's recursive CTE reproduce it.
+    */
+  def connectedComponents(spark: SparkSession, dir: String): DataFrame =
+    connectedComponentsCore(CooccurrenceGraph.edgeCounts(spark, dir))
+
+  /** Core over any (src, dst, weight) edge frame — fixture seam: the
+    * [[components]] kernel, grouped in the same task.
+    */
+  private[graft] def connectedComponentsCore(edges: DataFrame): DataFrame =
+    inOneTask(edges, groupSchema("component_rep")) { es => grouped(components(es)) }
+      .sortWithinPartitions(desc("n_members"), asc("component_rep"))
 
   /** Runs `kernel` over the whole of `edges` — (src, dst, weight), non-NULL
     * names and Long weights — in ONE executor task and returns its rows
@@ -480,6 +450,45 @@ object GraphOps {
   /** Both directions of every edge, duplicates kept (UNION ALL). */
   private def symmetric(es: Seq[(String, String, Long)]): Seq[(String, String, Long)] =
     es.flatMap { case (s, d, w) => Seq((s, d, w), (d, s, w)) }
+
+  /** Spark's string order: UTF-8 bytes, as `min`, `sort_array` and `asc`. */
+  private val utf8: Ordering[String] = Ordering.by(UTF8String.fromString)
+
+  /** Each vertex of `es` mapped to the smallest member of its connected
+    * component: union-find whose root is always the smaller of the two
+    * roots it joins, with path halving.
+    */
+  private def components(es: Seq[(String, String, Long)]): Map[String, String] = {
+    val root = mutable.Map.empty[String, String]
+    for ((s, d, _) <- es; v <- Seq(s, d)) root.getOrElseUpdate(v, v)
+    def find(v: String): String = {
+      var x = v
+      while (root(x) != x) { root(x) = root(root(x)); x = root(x) }
+      x
+    }
+    for ((s, d, _) <- es) {
+      val (a, b) = (find(s), find(d))
+      if (a != b) root(utf8.max(a, b)) = utf8.min(a, b)
+    }
+    root.keys.toVector.map(v => v -> find(v)).toMap
+  }
+
+  /** (`rep`, members, n_members): one group of vertices per label, the
+    * schema of `members[0]`, `sort_array(collect_list(…))` and `count`.
+    */
+  private def groupSchema(rep: String): StructType = StructType(Seq(
+    StructField(rep, StringType),
+    StructField("members", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("n_members", LongType, nullable = false)))
+
+  /** One row per label of `label`: the members sorted and the smallest
+    * as the rep, so no label value leaves the kernel.
+    */
+  private def grouped(label: Map[String, String]): Iterator[Row] =
+    label.groupMap(_._2)(_._1).valuesIterator.map { vs =>
+      val members = vs.toVector.sorted(utf8)
+      Row(members.head, members, members.size.toLong)
+    }
 
   val bfsMaxHops = 8
 
@@ -737,65 +746,27 @@ object GraphOps {
   /** Deterministic WEIGHTED label propagation — community detection,
     * the second of the reference readme's graph aspirations
     * (relation_graph/readme.md:18-19; the reference implements neither).
-    * Labels ARE entity names (not GraphX vertex ids), so the tie-break
-    * is a total order a human can replay: each round, every vertex
-    * adopts the label with the greatest incident edge-weight sum among
-    * its neighbors' labels, ties to the LEXICOGRAPHICALLY SMALLEST
-    * label. Synchronous rounds + ordered tie-break + fixed iteration
-    * count = bit-deterministic output (plain LPA is notoriously
+    * Labels ARE entity names, so the tie-break is a total order a human
+    * can replay: each round, every vertex adopts the label with the
+    * greatest incident edge-weight sum among its neighbors' labels,
+    * ties to the smallest label in UTF-8 byte order. Synchronous
+    * rounds + ordered tie-break + fixed iteration count =
+    * bit-deterministic output (plain LPA is notoriously
     * run-order-dependent; GraphOpsSpec pins a hand-computed fixture).
+    * Output is label-free, like q34: one row per community
+    * (community_rep = smallest member, the sorted members, n_members),
+    * largest first.
     *
     * `edges` = 3 columns (src, dst, weight), any names, one row per
     * undirected pair — the q95/q31 edge-table shape. Symmetrized here.
-    * Scale: like q33/q34 the ITERATION runs on the lexicon-bounded
-    * aggregated graph (|V| ≤ lexicon); only the upstream edge-weight
-    * aggregation scales with corpus volume. Per-round caches are
-    * dropped after materialization, result is lineage-cut.
+    * Scale: q329's [[lpaLabels]] rounds and the grouping run as one
+    * [[inOneTask]] kernel over the lexicon-bounded aggregated graph
+    * (|V| ≤ lexicon); only the upstream edge-weight aggregation scales
+    * with corpus volume.
     */
-  def labelPropagation(edges: DataFrame, iters: Int = lpaIters): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.toDF("src", "dst", "weight")
-      .withColumn("src_id", xxhash64(col("src")))
-      .withColumn("dst_id", xxhash64(col("dst")))
-      .cache()
-    val verts = names(e).rdd.map(r => (r.getLong(1), r.getString(0)))
-    val sym = e.select("src_id", "dst_id", "weight").rdd.flatMap { r =>
-      val (s, d, w) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      Seq(Edge(s, d, w), Edge(d, s, w))
-    }.coalesce(2)
-    var g: Graph[String, Long] = Graph(verts, sym).cache()
-    val toDrop = scala.collection.mutable.ArrayBuffer[Graph[_, _]](g)
-    for (_ <- 1 to iters) {
-      val msgs = g.aggregateMessages[Map[String, Long]](
-        t => t.sendToDst(Map(t.srcAttr -> t.attr)),
-        (a, b) => (a.keySet ++ b.keySet).iterator
-          .map(k => k -> (a.getOrElse(k, 0L) + b.getOrElse(k, 0L))).toMap)
-      g = g.outerJoinVertices(msgs)((_, old, m) =>
-        m.filter(_.nonEmpty)
-          .map(_.minBy { case (lbl, w) => (-w, lbl) }._1)
-          .getOrElse(old)).cache()
-      // no per-iteration count barrier (r17): the per-level cache()
-      // makes the single final action compute each level exactly once
-      // (a level's two consumers — next round's messages and join —
-      // read the cached partitions), and on the lexicon-bounded graph
-      // holding all levels cached until materializeAndRelease is a few
-      // KB; the former count-per-iteration was 10 extra scheduled jobs
-      // of pure barrier (~0.1 s each at local[32])
-      toDrop += g
-    }
-    val s2 = spark
-    import s2.implicits._
-    val labelDf = g.vertices.toDF("vid", "label")
-    val out = names(e).join(labelDf, "vid")
-      .groupBy("label")
-      .agg(sort_array(collect_list("entity_id")).as("members"),
-        count(lit(1)).as("n_members"))
-      // label-free output, like q34: rep = smallest member name
-      .select(col("members")(0).as("community_rep"), col("members"),
-        col("n_members"))
-      .orderBy(desc("n_members"), asc("community_rep"))
-    materializeAndRelease(out, e, toDrop.toSeq: _*)
-  }
+  def labelPropagation(edges: DataFrame): DataFrame =
+    inOneTask(edges, groupSchema("community_rep")) { es => grouped(lpaLabels(es)) }
+      .sortWithinPartitions(desc("n_members"), asc("community_rep"))
 
   val louvainMaxPasses = 5
   val louvainMaxSweeps = 20
@@ -832,8 +803,9 @@ object GraphOps {
     * kernel over that bounded graph (near-empty partitions would be
     * pure scheduling overhead) — no driver collect, no per-round job
     * scheduling. A graph too big for one task is the regime where
-    * sequential Louvain itself stops being meaningful; [[labelPropagation]]
-    * is the fully-distributed fallback there.
+    * sequential Louvain itself stops being meaningful; no community
+    * detection here runs distributed ([[labelPropagation]] is a one-task
+    * kernel too).
     */
   def louvain(edges: DataFrame): DataFrame =
     inOneTask(edges, StructType(Seq(StructField("entity_id", StringType),
@@ -1105,19 +1077,18 @@ object GraphOps {
 
   /** q74 — modularity of the connected-component partition of the
     * co-occurrence graph (community id = min member name, matching
-    * q34's label-free convention so the oracle can reproduce it).
+    * q34's label-free convention so the oracle can reproduce it). q337's
+    * shape: the [[components]] kernel's membership feeds [[modularity]].
     */
-  def componentModularity(spark: SparkSession, dir: String): DataFrame = {
-    val (g, e) = edgeGraph(spark, dir)
-    val cc = g.connectedComponents()
-    val s = spark
-    import s.implicits._
-    val memb0 = names(e).join(cc.vertices.toDF("vid", "comp0"), "vid")
-    val rep = memb0.groupBy("comp0").agg(min("entity_id").as("community"))
-    val memb = memb0.join(rep, "comp0").select("entity_id", "community")
-    val out = modularity(e.select("src", "dst", "weight"), memb)
-    materializeAndRelease(out, e, g, cc)
-  }
+  def componentModularity(spark: SparkSession, dir: String): DataFrame =
+    componentModularityCore(CooccurrenceGraph.edgeCounts(spark, dir).localCheckpoint(true))
+
+  /** Core over any (src, dst, weight) edge frame — fixture seam. */
+  private[graft] def componentModularityCore(edges: DataFrame): DataFrame =
+    modularity(edges,
+      inOneTask(edges, vertexSchema(edges, "community", StringType, nullable = true)) { es =>
+        components(es).iterator.map { case (v, c) => Row(v, c) }
+      })
 
   /** q154 — NEIGHBOR-OVERLAP structural similarity: for every entity
     * pair with at least one common neighbor, the Jaccard similarity of
@@ -1346,11 +1317,11 @@ object GraphOps {
     * recursive-CTE oracle as q34, computed by a second, independent
     * algorithm with no RDD/GraphX boundary at all.
     *
-    * Why it earns a slot next to q34: GraphX's Pregel loop exits
-    * Catalyst (no AQE, no codegen, Java serialization at the
-    * boundary), while every step here is two hash aggregates and an
-    * equi-join on the node key — whole-stage-codegen'd, AQE-planned,
-    * and shuffle-partitioned like any other query. At 100 TB-scale
+    * Why it earns a slot next to q34: q34's union-find runs in one
+    * task and is sound only on a lexicon-bounded graph, while every
+    * step here is two hash aggregates and an equi-join on the node key
+    * — whole-stage-codegen'd, AQE-planned, and shuffle-partitioned like
+    * any other query. At 100 TB-scale
     * graphs (the aggregated edge set here is lexicon-bounded, but the
     * same operator runs unchanged on a billion-edge identity graph)
     * the star steps keep every round a bounded number of node-keyed
@@ -1657,15 +1628,15 @@ object GraphOps {
     mst
   }
 
-  /** q34 IS oracle-able despite GraphX: the output is label-free
-    * (component_rep = min member, not a GraphX vertex id), so a DuckDB
+  /** q34 is oracle-able: the output is label-free
+    * (component_rep = min member, not an internal id), so a DuckDB
     * recursive-CTE reachability closure over the same symmetrized edge
     * set reproduces it exactly — strings and integers only, no float
     * drift possible. q33's fixed-point doubles stay rows-only (the
     * power-iteration sums are order-dependent in IEEE; invariants
     * Σ rank = |V| and weight-monotone ranking pinned in GraphOpsSpec).
     */
-  /** The label-free component closure both q34 (GraphX) and q209
+  /** The label-free component closure both q34 (one-task union-find) and q209
     * (DataFrame star alternation) must reproduce: recursive-CTE
     * reachability over the same symmetrized edge set, rep = min member.
     */

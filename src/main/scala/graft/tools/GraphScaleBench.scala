@@ -26,7 +26,8 @@ import graft.ops.{CooccurrenceGraph, GraphOps}
   * mode is the real stress: `synth:E1,E2,...` builds deterministic
   * hash-random graphs with E edges over E/2 nodes (supercritical — one
   * giant component, the worst case for the CC/Borůvka fixpoints) and
-  * times the kernels where the per-round joins genuinely move data.
+  * times the distributed kernels where the per-round joins genuinely
+  * move data. The one-task kernels (louvain, lpa) run in K mode only.
   *
   * Usage: runMain graft.tools.GraphScaleBench [sfDir] [K1,K2,... |
   * synth:E1,E2,...] (defaults: /root/testdata/sf0.1 and 1,10).
@@ -54,7 +55,6 @@ object GraphScaleBench {
           greatest(col("src"), col("dst")).as("b"),
           col("weight"))).count())
       timed(s"$tag kcore")(GraphOps.kCoreNumbers(edges).count())
-      timed(s"$tag lpa")(GraphOps.labelPropagation(edges).count())
     }
 
     if (spec.startsWith("synth:")) {
@@ -91,7 +91,9 @@ object GraphScaleBench {
       }.reduce(_ unionAll _).localCheckpoint(true)
       println(s"[gscale] --- K=$k (${scaled.count()} edges) ---")
       kernels(s"K=$k", scaled)
+      // the one-task kernels: lexicon-bounded input only, so no synth rung
       timed(s"K=$k louvain")(GraphOps.louvain(scaled).count())
+      timed(s"K=$k lpa")(GraphOps.labelPropagation(scaled).count())
       scaled.unpersist(blocking = false)
     }
     base.unpersist(blocking = false)

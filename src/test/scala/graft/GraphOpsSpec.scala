@@ -44,7 +44,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(got.keySet == rank.keySet)
     got.foreach { case (v, g) =>
       assert(math.abs(g - rank(v)) <= 1e-9,
-        s"$v: graphx $g vs replica ${rank(v)}")
+        s"$v: engine $g vs replica ${rank(v)}")
     }
   }
 
@@ -143,7 +143,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     val got = GraphOps.lpaExact(spark, sf).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == label, s"engine $got vs replica $label")
-    // same label dynamics as q35's GraphX twin: the induced partitions
+    // same label dynamics as q35's member-list twin: the induced partitions
     // agree (q35 emits member lists; q329 the assignment grain)
     val q35Parts = GraphOps.labelPropagation(
         CooccurrenceGraph.edgeCounts(spark, sf)).collect()
@@ -969,13 +969,13 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
       SCTest.Parameters.default.withMinSuccessfulTests(10), prop).passed)
   }
 
-  test("q209 agrees with q34's GraphX components on the documents corpus") {
+  test("q209 agrees with q34's one-task components on the documents corpus") {
     val star = GraphOps.ccDataFrame(spark, sf)
       .withColumn("members", array_join(col("members"), ","))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val graphx = GraphOps.connectedComponents(spark, sf)
+    val q34 = GraphOps.connectedComponents(spark, sf)
       .withColumn("members", array_join(col("members"), ","))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    assert(star.toSeq === graphx.toSeq)
+    assert(star.toSeq === q34.toSeq)
   }
 }

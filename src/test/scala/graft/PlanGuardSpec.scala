@@ -27,9 +27,8 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestBase {
     "q60_knn_bruteforce", "q63_ann_hyperplane_lsh", "q64_embedding_near_dups",
     "q65_ann_ivf",
     // modularity's crossJoin(broadcast(m2)): the broadcast side is the
-    // single-row 2m total (q74's twin escapes the sweep only because it
-    // materializes eagerly behind localCheckpoint)
-    "q75_community_modularity",
+    // single-row 2m total (q337 below carries the same tail)
+    "q74_component_modularity", "q75_community_modularity",
     // PMI's crossJoin(broadcast(n)): the broadcast side is the
     // single-row corpus token total
     "q111_pmi_collocations",
