@@ -9,6 +9,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -31,6 +32,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * `procs` counts the operating-system processes the JVM started during
   * the run (JFR `jdk.ProcessStart`): Hadoop's local filesystem shells out
   * to `readlink`/`chmod` when libhadoop is absent, a few ms each.
+  * `compiles` counts the Janino compiles during the run
+  * ([[compilesDuring]]): a warm rep reads 0 when every generated class
+  * hits the codegen cache.
   * Stream micro-batches run under their stream's own job group, so a
   * streaming query lists only the stages its driver thread ran.
   *
@@ -48,7 +52,8 @@ object Probe {
 
   final case class Run(query: String, rep: Int, buildNs: Long,
       optimizeNs: Long, planNs: Long, execNs: Long, wallNs: Long,
-      sqlExecutions: Int, jobs: Int, procs: Long, stages: Seq[Stage])
+      sqlExecutions: Int, jobs: Int, procs: Long, compiles: Long,
+      stages: Seq[Stage])
 
   /** `body`'s result and the number of processes the JVM started while it
     * ran, from a JFR recording of `jdk.ProcessStart` events alone.
@@ -65,6 +70,17 @@ object Probe {
         (a, RecordingFile.readAllEvents(f).size.toLong)
       } finally Files.delete(f)
     } finally rec.close()
+  }
+
+  /** `body`'s result and the number of Janino compiles that ended while
+    * it ran, from `CodegenMetrics`' compilation-time histogram. The count
+    * is process-wide, so it covers the tasks and stream threads `body`
+    * waits for; a codegen-cache hit compiles nothing.
+    */
+  def compilesDuring[A](body: => A): (A, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val a = body
+    (a, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 
   /** Collects the jobs, stages and SQL executions of one job group. */
@@ -139,17 +155,18 @@ object Probe {
         val t0 = System.nanoTime(); val a = body
         (System.nanoTime() - t0, a)
       }
-      val ((build, optimize, plan, exec, wall, df), procs) = processStarts {
-        val start = System.nanoTime()
-        val (build, df) = timed(SparkEntry.queries(name)(spark, sfDir))
-        val (optimize, _) = timed(df.queryExecution.optimizedPlan)
-        val (plan, _) = timed(df.queryExecution.executedPlan)
-        val (exec, _) = timed(df.write.format("noop").mode("overwrite").save())
-        (build, optimize, plan, exec, System.nanoTime() - start, df)
-      }
+      val (((build, optimize, plan, exec, wall, df), procs), compiles) =
+        compilesDuring(processStarts {
+          val start = System.nanoTime()
+          val (build, df) = timed(SparkEntry.queries(name)(spark, sfDir))
+          val (optimize, _) = timed(df.queryExecution.optimizedPlan)
+          val (plan, _) = timed(df.queryExecution.executedPlan)
+          val (exec, _) = timed(df.write.format("noop").mode("overwrite").save())
+          (build, optimize, plan, exec, System.nanoTime() - start, df)
+        })
       val (executions, jobs, stages) = listener.drain(sc)
       (Run(name, rep, build, optimize, plan, exec, wall, executions, jobs,
-        procs, stages), df)
+        procs, compiles, stages), df)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -160,7 +177,8 @@ object Probe {
     def s(ns: Long) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(ns / 1e9))
     val phase = s"[phase] rep${r.rep} ${r.query} build=${s(r.buildNs)} " +
       s"optimize=${s(r.optimizeNs)} plan=${s(r.planNs)} exec=${s(r.execNs)} " +
-      s"wall=${s(r.wallNs)} s sql=${r.sqlExecutions} jobs=${r.jobs} procs=${r.procs}"
+      s"wall=${s(r.wallNs)} s sql=${r.sqlExecutions} jobs=${r.jobs} procs=${r.procs} " +
+      s"compiles=${r.compiles}"
     phase +: r.stages.map(st =>
       s"[stage] rep${r.rep} ${r.query} id=${st.id} tasks=${st.tasks} " +
         s"wall=${s(st.wallMs * 1000000L)} cpu=${s(st.cpuNs)} in=${st.inputBytes} " +

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress,
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.ops.{Sessionization, TextAnalysis}
+import graft.ops.{Dedup, Sessionization, TextAnalysis}
 import StagedInputs.stageOne
 
 /** Driver-gated registrations of the §2.9 streaming surface: each query
@@ -122,6 +122,24 @@ object StreamingQueries {
     * paths through `java.nio` and starts none; other schemes keep
     * Spark's manager.
     *
+    * The scope also turns per-session artifact isolation off
+    * ([[isolationKey]]), so a run's tasks load generated classes through
+    * the executor's default class loader. `start()` runs the
+    * micro-batches in a clone of the session with a fresh session UUID;
+    * with isolation on, every job is tagged with that UUID and the
+    * executor builds a new session state, class loaders included, for
+    * it. The codegen cache is keyed by (class loader, code), so each run
+    * compiled every class again, and the JIT started over on them.
+    * The clone copies this conf at `start()`; the session the query was
+    * called on keeps its own isolation. No artifact (JAR, file, REPL
+    * class) is ever added to a session here, so the fresh loaders held
+    * nothing but the recompiled classes. Janino compiles per warm
+    * execution (`graft.Probe`, sf0.1, 4 cores, reps 2–5 in one JVM per
+    * query), before → after: q78 12 → 0, q79 19 → 0, q98 11 → 0,
+    * q99 19 → 0, q100 14 → 0, q113 6 → 0, q128 2 → 0, q194 11 → 0,
+    * q212 21 → 0, q241 26 → 0, q285 17 → 3 (→ 0 with its binary bucket
+    * state, [[LshBucket]]).
+    *
     * `noDataBatches = false` additionally skips watermark-only no-data
     * micro-batches — ONLY sound when no emitted row depends on
     * watermark-driven eviction or event-time timeout (those fire in
@@ -135,7 +153,8 @@ object StreamingQueries {
     val confs = Seq(
       "spark.sql.shuffle.partitions" -> "8",
       providerKey -> rocksDbProvider,
-      LocalCheckpointFiles.Key -> classOf[LocalCheckpointFiles].getName) ++
+      LocalCheckpointFiles.Key -> classOf[LocalCheckpointFiles].getName,
+      isolationKey -> "false") ++
       Option.when(!noDataBatches)("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     val sink = s"graft_${id}_sink_${sinkSeq.incrementAndGet()}"
     recorded.put(id, Vector.empty)
@@ -145,6 +164,9 @@ object StreamingQueries {
   }
 
   private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Per-session artifact isolation, off inside [[withRun]]. */
+  private[graft] val isolationKey = "spark.sql.artifact.isolation.enabled"
 
   /** RocksDB state store for every stateful stream in this module
     * (r18, guide §5/§6): the default HDFS-backed provider keeps state
@@ -812,7 +834,9 @@ object StreamingQueries {
         count(lit(1)).as("n_events"),
         round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
           .as("value_sum"))
-      .orderBy("event_type")
+      // one row per event type: sorted in one task, with no range
+      // exchange and no sampling job for its bounds
+      .coalesce(1).sortWithinPartitions("event_type")
 
     val ev = Tables.events(spark, dir)
       .filter(col("ts").isNotNull)
@@ -982,6 +1006,35 @@ object StreamingQueries {
   private[graft] case class LshIn(bucket: String, band: Int,
                                   doc_id: Long, signature: Seq[Long])
 
+  /** One LSH bucket's state: its members in arrival order, each its id
+    * and its fixed-width ([[graft.ops.Dedup.numHashes]]) signature, as
+    * big-endian longs end to end. Binary state decodes without a
+    * `MapObjects` loop; a `Seq[(Long, Seq[Long])]` (or an array) state
+    * decoded through one, whose lambda variables are numbered afresh
+    * for each micro-batch's state manager, so every batch compiled its
+    * state projection again.
+    */
+  private[graft] object LshBucket {
+    private val width = 1 + Dedup.numHashes
+
+    def decode(bytes: Array[Byte]): Seq[(Long, Seq[Long])] = {
+      val longs = java.nio.ByteBuffer.wrap(bytes).asLongBuffer()
+      (0 until longs.limit() / width).map { i =>
+        longs.get(i * width) -> (1 until width).map(j => longs.get(i * width + j))
+      }
+    }
+
+    def encode(members: Seq[(Long, Seq[Long])]): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(members.size * width * 8)
+      members.foreach { case (id, sig) =>
+        require(sig.size == Dedup.numHashes, s"signature of width ${sig.size}")
+        buf.putLong(id)
+        sig.foreach(buf.putLong)
+      }
+      buf.array()
+    }
+  }
+
   /** q285 — STREAMING LSH NEAR-DUP (dedup-on-ingest at the crawl
     * frontier): the incremental twin of q54's banded MinHash join.
     * Docs arrive in micro-batches; each row's signature is a STATELESS
@@ -1029,7 +1082,6 @@ object StreamingQueries {
   private[graft] def streamingLshDedupImpl(spark: SparkSession, dir: String,
                                            bucketCap: Int): DataFrame = {
     import spark.implicits._
-    import graft.ops.Dedup
     val minEst = 0.5
     val numBands = Dedup.numHashes / Dedup.bandSize
     val docs = Tables.documents(spark, dir).select("doc_id", "lang", "text")
@@ -1082,11 +1134,11 @@ object StreamingQueries {
         (0 until numBands).find(i => bandSlice(a, i) == bandSlice(b, i)).getOrElse(-1)
 
       val pairs = banded.groupByKey(_.bucket)
-        .flatMapGroupsWithState[Seq[(Long, Seq[Long])], (Long, Long, Double)](
+        .flatMapGroupsWithState[Array[Byte], (Long, Long, Double)](
           org.apache.spark.sql.streaming.OutputMode.Append(),
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
           (_, rows, state) =>
-            val seen = state.getOption.getOrElse(Seq.empty)
+            val seen = state.getOption.fold(Seq.empty[(Long, Seq[Long])])(LshBucket.decode)
             val fresh = rows.toSeq.sortBy(_.doc_id)
             val out = Seq.newBuilder[(Long, Long, Double)]
             var acc = seen
@@ -1110,7 +1162,7 @@ object StreamingQueries {
                 acc = acc :+ ((nd.doc_id, nd.signature))
               }
             }
-            state.update(acc)
+            state.update(LshBucket.encode(acc))
             out.result().iterator
         }
 
